@@ -103,6 +103,12 @@ object CcState {
     * why both merge-map paths are budget-free: the driver union-find is
     * exact, and the distributed fallback iterates
     * [[Dedup.connectedComponents]] to fixpoint.
+    *
+    * Replay safety: the delta is a pure function of strictly-earlier
+    * partitions (the read excludes its own), so an at-least-once re-run
+    * replaces its partition with identical rows — no ledger. A streaming
+    * micro-batch id `b` maps to `seq = b + 1` (seq 0 is
+    * [[createCcState]]'s bootstrap).
     */
   def appendCcEdges(spark: SparkSession, warehouseDir: String, name: String,
       edges: DataFrame, aCol: String, bCol: String, seq: Int): Unit = {

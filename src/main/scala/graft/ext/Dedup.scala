@@ -1016,10 +1016,13 @@ object Dedup {
     * it is the same relation exact span dedup shuffles internally, paid
     * once instead of per run. Maintenance is append-only: new batches'
     * grams union in (duplicates within the table are harmless — the probe
-    * is a semi-join).
+    * is a semi-join). Resets the streaming twin's phase ledger
+    * ([[graft.io.PhaseLedger]]) first, so re-seeded state never inherits
+    * an earlier run's marks.
     */
   def writeSpanState(corpus: DataFrame, text: Column, idCol: String, k: Int,
       warehouseDir: String, name: String, numBuckets: Int): Unit = {
+    graft.io.PhaseLedger.reset(corpus.sparkSession, warehouseDir, name)
     graft.functions.TextExpressions.register(corpus.sparkSession)
     graft.io.Tables.writeWarehouseBucketed(
       corpus.select(explode(
@@ -1067,7 +1070,7 @@ object Dedup {
         posexplode(call_function("text_shingle_hashes", text, lit(k)))
           .as(Seq("start", "gram_hash")))
       // consumed twice (dup agg + state semi-join); eager localCheckpoint
-      // instead of cache so long-lived streaming callers (dupSpansInto
+      // instead of cache so long-lived streaming callers (dupSpansBatch
       // runs one of these per micro-batch) don't accumulate pinned
       // storage — checkpoint blocks free with the plan, caches don't
       .localCheckpoint(true)

@@ -174,7 +174,13 @@ object EwmaState {
       xFp, num, den, seq = 0)
   }
 
-  /** Fold one ordered batch from the stored resume points (seq ≥ 1). */
+  /** Fold one ordered batch from the stored resume points (seq ≥ 1).
+    * Replay safety: both output partitions are pure functions of
+    * strictly-earlier partitions, so an at-least-once re-run of the same
+    * seq replaces them with identical rows — no ledger. Ordering
+    * contract: batches arrive in per-key order (file drops of nightly ts
+    * ranges do). A streaming micro-batch id `b` maps to `seq = b + 1`.
+    */
   def appendEwmaBatch(spark: SparkSession, warehouseDir: String, name: String,
       batch: DataFrame, keyCol: String, orderCol: Column, xFp: Column,
       num: Long, den: Long, seq: Int): Unit = {

@@ -80,7 +80,8 @@ object IncrementalAgg {
     * partition write), and a REPLAYED batch tag REPLACES its own
     * partition via dynamic overwrite instead of double-counting — the
     * exactly-once contract `foreachBatch`'s at-least-once replay needs
-    * ([[graft.streaming.StreamingIngest.aggInto]]). Same fixed-point
+    * ([[appendDeltaPartition]] per micro-batch under
+    * [[graft.streaming.StreamingIngest.sinkInto]]). Same fixed-point
     * determinism contract as the compact layout.
     */
   def writeDeltaState(warehouseDir: String, name: String, batch: DataFrame,
@@ -90,7 +91,11 @@ object IncrementalAgg {
       warehouseDir, name, Seq("_ingest_batch"))
 
   /** Append one batch's partials under its tag (replay-idempotent: the
-    * tag's partition is replaced, not appended).
+    * tag's partition is replaced, not appended — idempotence from the
+    * storage layout itself, no ledger relation). Bootstrap with
+    * [[writeDeltaState]] (seed tag) before the first run; compact with
+    * [[compactDeltaState]] between runs only (see its maintenance-window
+    * contract).
     */
   def appendDeltaPartition(warehouseDir: String, name: String, batch: DataFrame,
       groupCols: Seq[String], valueFp: Column, batchTag: String): Unit =

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, explode, lit, sequence, sum}
 
-import graft.io.Tables
+import graft.io.{PhaseLedger, Tables}
 
 /** Incremental JOIN maintenance — the join half of the materialized-view
   * story ([[IncrementalAgg]] is the aggregate half). A warehouse serves
@@ -189,70 +189,14 @@ object IncrementalJoin {
       .filter(col(MultCol) =!= 0)
   }
 
-  private def appliedName(name: String) = s"${name}_applied"
-
-  /** The phase ledger is FILESYSTEM MARKER FILES, not a Spark relation:
-    * one `<tag>.<phase>` file under `{name}_applied/`. A ledger probe is
-    * one `exists()` metadata call and a mark is one atomic create —
-    * zero Spark jobs for either, where the r12 table-backed form paid a
-    * catalog read job per probe and a bucketed `saveAsTable` append per
-    * mark (6-8 scheduler round-trips per nightly append, measured ~40%
-    * of the CDC ingest wall time at bench scale — guide §1.2 step 1:
-    * fix the number of passes before the per-task work). Crash
-    * semantics are unchanged: the marker is created AFTER its phase's
-    * append commits, creation is atomic (create-fails-if-exists
-    * overwrite=false), and a replay probes exactly what the crashed
-    * attempt had durably marked.
-    */
-  private def ledgerDir(warehouseDir: String, name: String) =
-    new org.apache.hadoop.fs.Path(s"$warehouseDir/${appliedName(name)}")
-
-  private def fsOf(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def phaseMarked(spark: SparkSession, warehouseDir: String,
-      name: String, tag: String, phase: String): Boolean = {
-    val dir = ledgerDir(warehouseDir, name)
-    val fs = fsOf(spark, dir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, s"$tag.$phase"))) true
-    else {
-      // LEGACY LEDGER GUARD (miss path only — one listing, no Spark
-      // jobs): pre-r13 state recorded applied batches as a bucketed
-      // PARQUET TABLE at this same path. Counted state created under
-      // that form has no marker files, so treating the miss as
-      // "unapplied" would re-apply a replayed batch — and because the
-      // side relations already hold its rows, the recomputed out-delta
-      // is not a full-row duplicate and the read-side distinct cannot
-      // absorb it (a silent double count). Fail loudly instead.
-      val legacy = fs.exists(dir) && fs.listStatus(dir).exists(
-        _.getPath.getName.endsWith(".parquet"))
-      require(!legacy,
-        s"$name carries a pre-marker (table-backed) phase ledger at $dir " +
-          "— its applied-batch history cannot be probed as marker files. " +
-          "Re-seed the state with createStoredCounted before appending.")
-      false
-    }
-  }
-
-  private def markPhase(spark: SparkSession, warehouseDir: String,
-      name: String, tag: String, phase: String): Unit = {
-    val dir = ledgerDir(warehouseDir, name)
-    val fs = fsOf(spark, dir)
-    fs.mkdirs(dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, s"$tag.$phase"),
-      false)
-    out.close()
-  }
-
   /** Seed COUNTED state from the first batches (both taken as
     * insertions). Same three bucketed relations as [[createStored]], each
     * carrying [[MultCol]] + [[BatchCol]], plus the `{name}_applied`
-    * phase ledger; the delta rule below then handles deletes as
-    * first-class signed batches, which the append-only form cannot — the
-    * standard incremental-view-maintenance completion, and what lets the
-    * materialized join compose with [[graft.core.Merge]] tombstones
-    * instead of forcing a re-derive.
+    * phase ledger ([[PhaseLedger]], reset first); the delta rule below
+    * then handles deletes as first-class signed batches, which the
+    * append-only form cannot — the standard incremental-view-maintenance
+    * completion, and what lets the materialized join compose with
+    * [[graft.core.Merge]] tombstones instead of forcing a re-derive.
     */
   def createStoredCounted(spark: SparkSession, warehouseDir: String,
       name: String, left: DataFrame, right: DataFrame, keyCol: String,
@@ -261,11 +205,7 @@ object IncrementalJoin {
     require(overlap.isEmpty, s"non-key column overlap: $overlap")
     def seeded(df: DataFrame) =
       preFold(inserts(df)).withColumn(BatchCol, lit("base"))
-    // reset the phase ledger FIRST: a leftover marker dir from an earlier
-    // run of the same state name would make the first nightly append
-    // short-circuit against state this create is about to replace
-    val dir = ledgerDir(warehouseDir, name)
-    fsOf(spark, dir).delete(dir, true)
+    PhaseLedger.reset(spark, warehouseDir, name)
     Tables.writeWarehouseBucketed(seeded(left), warehouseDir,
       s"${name}_left", keyCol, numBuckets)
     Tables.writeWarehouseBucketed(seeded(right), warehouseDir,
@@ -276,7 +216,7 @@ object IncrementalJoin {
       preFold(joinedCounted(l0.drop(BatchCol), r0.drop(BatchCol), keyCol))
         .withColumn(BatchCol, lit("base")),
       warehouseDir, s"${name}_out", keyCol, numBuckets)
-    markPhase(spark, warehouseDir, name, "base", "right")
+    PhaseLedger.mark(spark, warehouseDir, name, "base", "right")
   }
 
   /** Nightly COUNTED maintenance. `dLeft`/`dRight` are SIGNED delta
@@ -313,7 +253,7 @@ object IncrementalJoin {
       batchTag: String, align: Boolean = false): Unit = {
     requireMult(dLeft, "left"); requireMult(dRight, "right")
     require(batchTag.nonEmpty && batchTag != "base", s"bad batchTag: $batchTag")
-    if (phaseMarked(spark, warehouseDir, name, batchTag, "right")) return
+    if (PhaseLedger.marked(spark, warehouseDir, name, batchTag, "right")) return
     val l0 = Tables.readWarehouseBucketed(spark, s"${name}_left")
     val r0 = Tables.readWarehouseBucketed(spark, s"${name}_right")
     val sideSchema = (rel: DataFrame) => org.apache.spark.sql.types.StructType(
@@ -323,7 +263,7 @@ object IncrementalJoin {
     val dr = graft.core.SchemaGuard.conform(sideSchema(r0), dRight, align,
       s"${name}_right")
     val outCols = Tables.readWarehouseBucketed(spark, s"${name}_out").columns
-    if (!phaseMarked(spark, warehouseDir, name, batchTag, "out")) {
+    if (!PhaseLedger.marked(spark, warehouseDir, name, batchTag, "out")) {
       val delta = preFold(
         joinedCounted(dl, r0.drop(BatchCol), keyCol)
           .unionByName(joinedCounted(l0.drop(BatchCol), dr, keyCol))
@@ -333,19 +273,19 @@ object IncrementalJoin {
         .localCheckpoint(true)
       if (!delta.isEmpty)
         delta.write.mode("append").insertInto(s"${name}_out")
-      markPhase(spark, warehouseDir, name, batchTag, "out")
+      PhaseLedger.mark(spark, warehouseDir, name, batchTag, "out")
     }
     // the folded side deltas are aggregates, consumed twice by appendSide
     // (emptiness probe + the append) — materialize once so the groupBy
     // does not run twice per side
-    if (!phaseMarked(spark, warehouseDir, name, batchTag, "left")) {
+    if (!PhaseLedger.marked(spark, warehouseDir, name, batchTag, "left")) {
       appendSide(spark, name, "left",
         preFold(dl).withColumn(BatchCol, lit(batchTag)).localCheckpoint(true))
-      markPhase(spark, warehouseDir, name, batchTag, "left")
+      PhaseLedger.mark(spark, warehouseDir, name, batchTag, "left")
     }
     appendSide(spark, name, "right",
       preFold(dr).withColumn(BatchCol, lit(batchTag)).localCheckpoint(true))
-    markPhase(spark, warehouseDir, name, batchTag, "right")
+    PhaseLedger.mark(spark, warehouseDir, name, batchTag, "right")
   }
 
   /** The counted view: contribution rows dedup by full-row `distinct`

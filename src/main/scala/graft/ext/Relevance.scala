@@ -204,7 +204,7 @@ object Relevance {
   }
 
   /** REPLAY-SAFE [[appendTextIndex]] — the streaming-ingest form
-    * ([[graft.streaming.StreamingIngest.indexTextInto]]). `foreachBatch`
+    * ([[graft.streaming.StreamingIngest.indexTextBatch]]). `foreachBatch`
     * is at-least-once, and unlike the dedup state (where replayed
     * duplicate rows are semantically inert) a duplicated posting DOUBLES
     * a term's tf and a duplicated length row corrupts dl and the totals —

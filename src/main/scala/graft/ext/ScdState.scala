@@ -40,10 +40,14 @@ object ScdState {
   private def histName(name: String) = s"${name}_hist"
   private def curPath(name: String) = s"${name}_cur"
 
-  /** Seed state from the first batch. */
+  /** Seed state from the first batch. Resets the streaming twin's phase
+    * ledger ([[graft.io.PhaseLedger]]) first, so re-seeded state never
+    * inherits an earlier run's applied-batch marks.
+    */
   def createStored(spark: SparkSession, warehouseDir: String, name: String,
       batch: DataFrame, keyCol: String, versionCol: String, tiebreak: Column,
       numBuckets: Int): Unit = {
+    graft.io.PhaseLedger.reset(spark, warehouseDir, name)
     val b = Merge.scdHistory(batch, Seq(keyCol), versionCol, tiebreak)
     Tables.writeWarehouseBucketed(b.filter(!col("is_current")),
       warehouseDir, histName(name), keyCol, numBuckets)
@@ -68,8 +72,9 @@ object ScdState {
     * disk before the old slice is touched). Re-running a COMPLETED batch
     * is NOT inert (the then-current rows would be re-closed at the
     * batch's first version) — the streaming twin
-    * ([[graft.streaming.StreamingIngest.scdBatch]]) adds the batch
-    * ledger that makes full replays no-ops.
+    * ([[graft.streaming.StreamingIngest.scdBatch]]) adds the marker-file
+    * phase ledger ([[graft.io.PhaseLedger]]) that makes full replays
+    * no-ops.
     *
     * `align=false` rejects schema-drifted batches at the gate
     * ([[graft.core.SchemaGuard]]); `align=true` coerces to the stored

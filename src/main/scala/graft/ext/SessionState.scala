@@ -39,8 +39,9 @@ import graft.io.Tables
   * session_start) anti-join drops duplicates; the open replacement
   * recomputes identically). A FULL re-run of a completed batch is NOT
   * inert — the streaming twin
-  * ([[graft.streaming.StreamingIngest.sessionBatch]]) adds the batch
-  * ledger that short-circuits replays.
+  * ([[graft.streaming.StreamingIngest.sessionBatch]]) adds the
+  * marker-file phase ledger ([[graft.io.PhaseLedger]]) that
+  * short-circuits replays.
   */
 object SessionState {
 
@@ -72,10 +73,14 @@ object SessionState {
       lit(null).cast("timestamp").as("__ps"),
       lit(1L).as("__pn"), valueFp.cast("long").as("__pv"))
 
-  /** Seed state from the first batch (one fold, watermark split). */
+  /** Seed state from the first batch (one fold, watermark split).
+    * Resets the streaming twin's phase ledger ([[graft.io.PhaseLedger]])
+    * first, so re-seeded state never inherits an earlier run's marks.
+    */
   def createStored(spark: SparkSession, warehouseDir: String, name: String,
       batch: DataFrame, keyCol: String, tsCol: String, valueFp: Column,
       gap: String, numBuckets: Int): Unit = {
+    graft.io.PhaseLedger.reset(spark, warehouseDir, name)
     val sessions = fold(eventsShaped(batch, keyCol, tsCol, valueFp),
       keyCol, tsCol, gap).localCheckpoint(true)
     val wm = sessions.agg(max("last_ts")).head().getTimestamp(0)

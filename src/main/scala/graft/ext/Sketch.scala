@@ -370,7 +370,11 @@ object SketchState {
     * `_ingest_batch` partition. State grows k rows per batch — compact
     * by merging old partitions with [[readHhCandidates]]'s fold if the
     * batch count ever matters, though 10 years of nightly batches is
-    * ~3.7k·k rows: metadata-scale forever.
+    * ~3.7k·k rows: metadata-scale forever. Replay safety is FREE: the
+    * write is a dynamic partition REPLACE keyed by the batch tag, so an
+    * at-least-once re-run overwrites its own partition with identical
+    * rows (no ledger); serving reads merge the summaries declaratively
+    * and confirm exactly ([[storedHeavyHitters]]).
     */
   def appendHhState(spark: SparkSession, warehouseDir: String, name: String,
       batch: DataFrame, key: Column, k: Int, batchTag: String): Unit = {
@@ -768,7 +772,10 @@ object SketchState {
 
   /** Nightly append: the batch's own ≤depth·width-row grid replaces its
     * own partition — O(batch) cost, grid-sized footprint, replay-inert
-    * (an at-least-once rerun REPLACES its partition, no ledger).
+    * (an at-least-once rerun REPLACES its partition, no ledger). Counter
+    * ADDITIVITY makes the read-time sum-fold exactly equal the one-shot
+    * corpus grid at any micro-batch split, and the per-batch partitions
+    * double as the sliding-window axis ([[readCmsSketchWindow]]).
     */
   def appendCmsState(spark: SparkSession, warehouseDir: String, name: String,
       batch: DataFrame, key: Column, depth: Int, width: Int,

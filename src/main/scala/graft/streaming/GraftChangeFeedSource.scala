@@ -234,7 +234,8 @@ object GraftStreamProvider {
           "with a FRESH checkpoint and .option(\"startingVersion\", " +
           s""""$oldest") (or "latest"); for an initial full snapshot """ +
           "use the batch bootstrap (ManifestVersioned." +
-          "readChangesBootstrap / StreamingIngest.changeFeedBatch). " +
+          "readChangesBootstrap, or StreamingIngest.changeFeedBatch " +
+          "under StreamingIngest.sinkInto). " +
           "Size the table's vacuum retention above the slowest " +
           "subscriber's lag")
   }

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, current_timestamp, lit, regexp_extract}
+import org.apache.spark.sql.functions.{col, current_timestamp, lit, regexp_extract, when}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.core.{Merge, Pipeline}
-import graft.io.Tables
+import graft.io.{PhaseLedger, Tables}
 
 /** Structured Streaming twin of the reference's batch watermark loop.
   *
@@ -24,6 +24,10 @@ import graft.io.Tables
   * `foreachBatch`, reusing the exact batch merge operator — same tombstone
   * and latest-wins semantics, so batch and streaming stay provably in sync
   * (StreamingSpec asserts equality against `Merge.merge`).
+  *
+  * Every incremental-state stream runs through the one sink,
+  * [[sinkInto]]; each `xBatch` below is one micro-batch's body, factored
+  * out so its replay semantics are directly testable.
   */
 object StreamingIngest {
 
@@ -39,50 +43,58 @@ object StreamingIngest {
       .schema(schema)
       .csv(path)
 
-  /** Incremental warehouse maintenance: every micro-batch of change rows is
-    * normalized and merged (tombstones + latest-wins) into the parquet
-    * warehouse table. Runs with `Trigger.AvailableNow` — drain all new
-    * files, then stop, like the nightly cron — and restarts resume from the
-    * checkpoint's file log (no reprocessing, no manual state file).
+  /** The one streaming sink: run `batchFn` on every micro-batch of `df`.
+    * It holds the policy every incremental-state stream shares:
+    * `Trigger.AvailableNow` (drain all new input, then stop, like the
+    * nightly cron), and progress in `checkpoint` (a restart resumes from
+    * the checkpoint's source log: no reprocessing, no manual state file).
+    * `foreachBatch` delivery is AT-LEAST-ONCE: a crash between a batch's
+    * writes and the checkpoint commit re-runs the batch under the same
+    * `batchId`, so every `batchFn` must be replay-safe; each batch
+    * function below states its argument.
     */
-  def mergeInto(
-      changes: DataFrame,
+  def sinkInto(df: DataFrame, queryName: String, checkpoint: String)(
+      batchFn: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .queryName(queryName)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(batchFn)
+      .start()
+
+  /** One micro-batch of incremental warehouse maintenance: the change
+    * rows are normalized and merged (tombstones + latest-wins) into the
+    * parquet warehouse table.
+    */
+  def mergeBatch(
+      spark: SparkSession,
+      batch: DataFrame,
       warehouseDir: String,
       table: String,
       keyCol: String,
       order: Seq[Column],
       isTombstone: Column,
-      checkpoint: String,
       clock: Column = current_timestamp(),
-      timezone: String = "Africa/Nairobi"): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .queryName(s"graft-ingest-$table")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val normalized = Pipeline.normalizeStage(batch, timezone, clock)
-        val merged =
-          if (Tables.warehouseExists(spark, warehouseDir, table)) {
-            val current = Tables.readWarehouse(spark, warehouseDir, table)
-            Merge.merge(current, normalized, keyCol, order, isTombstone)
-          } else {
-            Merge.latestWins(
-              Merge.tombstoneFilter(normalized, keyCol, isTombstone),
-              Seq(keyCol), order)
-          }
-        // read-modify-overwrite (the reference's load pattern K2)
-        // through the STAGED swap (r13): the ._swap staging is both the
-        // materialization barrier (the merged plan reads the live table
-        // while the stage is written) and the crash guarantee — a batch
-        // dying mid-write leaves the intact old table plus sweepable
-        // debris, never a torn one, and foreachBatch's at-least-once
-        // replay re-runs the merge idempotently (same keys, same
-        // latest-wins winners).
-        Tables.replaceWarehouse(spark, warehouseDir, table, merged)
-        ()
+      timezone: String = "Africa/Nairobi"): Unit = {
+    val normalized = Pipeline.normalizeStage(batch, timezone, clock)
+    val merged =
+      if (Tables.warehouseExists(spark, warehouseDir, table)) {
+        val current = Tables.readWarehouse(spark, warehouseDir, table)
+        Merge.merge(current, normalized, keyCol, order, isTombstone)
+      } else {
+        Merge.latestWins(
+          Merge.tombstoneFilter(normalized, keyCol, isTombstone),
+          Seq(keyCol), order)
       }
-      .start()
+    // read-modify-overwrite (the reference's load pattern K2)
+    // through the STAGED swap: the ._swap staging is both the
+    // materialization barrier (the merged plan reads the live table
+    // while the stage is written) and the crash guarantee — a batch
+    // dying mid-write leaves the intact old table plus sweepable
+    // debris, never a torn one, and foreachBatch's at-least-once
+    // replay re-runs the merge idempotently (same keys, same
+    // latest-wins winners).
+    Tables.replaceWarehouse(spark, warehouseDir, table, merged)
   }
 
   /** The CLI nightly driver behind `GRAFT_MODE=stream`
@@ -107,9 +119,12 @@ object StreamingIngest {
       val rows = scala.util.Try {
         val path = s"$sourceRoot/$folder"
         val schema = Tables.readCsvFolder(spark, path).schema
-        val q = mergeInto(csvStream(spark, path, schema), warehouseDir,
-          table, keyCol, Pipeline.latestOrder, Pipeline.bc2adlsTombstone,
-          checkpoint = s"$checkpointRoot/$table", timezone = timezone)
+        val q = sinkInto(csvStream(spark, path, schema),
+            s"graft-ingest-$table", s"$checkpointRoot/$table") { (batch, _) =>
+          mergeBatch(spark, batch, warehouseDir, table, keyCol,
+            Pipeline.latestOrder, Pipeline.bc2adlsTombstone,
+            timezone = timezone)
+        }
         q.awaitTermination()
         Tables.readWarehouse(spark, warehouseDir, table).count()
       }
@@ -117,7 +132,7 @@ object StreamingIngest {
     }
   }
 
-  /** Streaming incremental dedup: every micro-batch of new documents is
+  /** One micro-batch of streaming incremental dedup: new documents are
     * cleaned against the STORED dedup state
     * ([[graft.ext.Dedup.writeDedupState]]) through
     * [[graft.ext.Dedup.incrementalDedupStored]] — the exact nightly-batch
@@ -126,40 +141,11 @@ object StreamingIngest {
     * the state tables, so the NEXT micro-batch dedups against them too.
     * Per-batch cost is O(batch): the corpus is never scanned (state
     * tables only), which is what makes this viable as a continuous
-    * ingest loop rather than a nightly job.
+    * ingest loop rather than a nightly job. Bootstrap: call
+    * `writeDedupState` once on the existing corpus (or an empty frame
+    * with the right schema) before the first run.
     *
-    * Bootstrap: call `writeDedupState` once on the existing corpus (or an
-    * empty frame with the right schema) before the first run.
-    */
-  def dedupInto(
-      docs: DataFrame,
-      warehouseDir: String,
-      corpusTable: String,
-      stateName: String,
-      textCol: String,
-      idCol: String,
-      numHashes: Int,
-      bands: Int,
-      shingleSize: Int,
-      estJaccardThreshold: Double,
-      checkpoint: String): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .queryName(s"graft-dedup-$corpusTable")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(spark, batch, batchId, warehouseDir, corpusTable,
-          stateName, textCol, idCol, numHashes, bands, shingleSize,
-          estJaccardThreshold)
-      }
-      .start()
-  }
-
-  /** One micro-batch of the streaming dedup — factored out so replay
-    * semantics are directly testable. foreachBatch is AT-LEAST-ONCE (a
-    * crash between the writes and the checkpoint commit re-runs the
-    * batch), so every write here is idempotent-or-replay-safe:
+    * Every write here is idempotent-or-replay-safe:
     *  - corpus survivors land in partition `_ingest_batch=<batchId>` via
     *    dynamic partition overwrite — a replayed batch REPLACES its own
     *    partition instead of appending duplicate documents;
@@ -172,7 +158,7 @@ object StreamingIngest {
       warehouseDir: String, corpusTable: String, stateName: String,
       textCol: String, idCol: String, numHashes: Int, bands: Int,
       shingleSize: Int, estJaccardThreshold: Double): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, md5}
+    import org.apache.spark.sql.functions.md5
     // materialize survivors BEFORE mutating the state they were computed
     // against (the writes below feed the plan's own inputs)
     // drift-guard the raw batch rows against the corpus schema BEFORE
@@ -184,8 +170,7 @@ object StreamingIngest {
       if (Tables.warehouseExists(spark, warehouseDir, corpusTable)) {
         val stored = Tables.readWarehouse(spark, warehouseDir, corpusTable)
         graft.core.SchemaGuard.conform(
-          org.apache.spark.sql.types.StructType(
-            stored.schema.fields.filterNot(_.name == "_ingest_batch")),
+          StructType(stored.schema.fields.filterNot(_.name == "_ingest_batch")),
           batch, align = false, s"$corpusTable (dedup corpus)")
       } else batch
     val survivors = graft.ext.Dedup.incrementalDedupStored(
@@ -230,46 +215,22 @@ object StreamingIngest {
     spark.sharedState.cacheManager.clearCache()
   }
 
-  /** Streaming maintenance of a STORED inverted text index
-    * ([[graft.ext.Relevance.writeTextIndex]]): every micro-batch of new
-    * documents lands in the postings/lengths/totals relations through the
-    * replay-safe append ([[graft.ext.Relevance.appendTextIndexSafe]] —
-    * per-document exactly-once under foreachBatch's at-least-once
-    * contract; a redelivered batch re-appends only rows whose write never
-    * completed). Per-batch cost is O(batch) tokenize+agg plus the
+  /** One micro-batch of streaming maintenance of a STORED inverted text
+    * index ([[graft.ext.Relevance.writeTextIndex]]): new documents land
+    * in the postings/lengths/totals relations through the replay-safe
+    * append ([[graft.ext.Relevance.appendTextIndexSafe]] — per-document
+    * exactly-once under foreachBatch's at-least-once contract; a
+    * redelivered batch re-appends only rows whose write never
+    * completed), so running it twice leaves the index byte-identical to
+    * running it once. Per-batch cost is O(batch) tokenize+agg plus the
     * idempotence probes; the corpus is never rescanned, searches between
     * batches read the live index. Bootstrap: run `writeTextIndex` once
     * (empty corpus is fine) before the first stream start — the same
-    * contract as [[dedupInto]].
-    */
-  def indexTextInto(
-      docs: DataFrame,
-      warehouseDir: String,
-      name: String,
-      textCol: String,
-      idCol: String,
-      numBuckets: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .queryName(s"graft-textindex-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        indexTextBatch(spark, batch, warehouseDir, name, textCol, idCol,
-          numBuckets)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[indexTextInto]] — factored out so replay
-    * semantics are directly testable (run it twice: the index must be
-    * byte-identical to running it once).
+    * contract as [[dedupBatch]].
     */
   def indexTextBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, name: String, textCol: String, idCol: String,
       numBuckets: Int): Unit = {
-    import org.apache.spark.sql.functions.col
     graft.ext.Relevance.appendTextIndexSafe(spark, name, batch,
       col(textCol), idCol, warehouseDir, numBuckets)
     // the appends ran on the micro-batch's cloned session; refresh the
@@ -280,50 +241,29 @@ object StreamingIngest {
       spark.catalog.refreshTable(s"${name}_$t"))
   }
 
-  /** Streaming ingest of trusted-corpus batches into the LOG-STRUCTURED
-    * LM count state ([[graft.ext.LangModel.writeLmDeltaState]]): every
-    * micro-batch's unigram/bigram count deltas are appended under the
-    * batch-id tag, so foreachBatch's at-least-once replay hits the
-    * applied-ledger no-op instead of double-counting — the count-state
-    * analogue of [[indexTextInto]]'s anti-join guard, at one-ledger-row
-    * cost per batch. Bootstrap: `writeLmDeltaState` once (any seed batch,
-    * e.g. empty) before the first stream start; compact periodically with
+  /** One micro-batch of streaming ingest of trusted-corpus batches into
+    * the LOG-STRUCTURED LM count state
+    * ([[graft.ext.LangModel.writeLmDeltaState]]): the batch's
+    * unigram/bigram count deltas are appended under the batch-id tag, so
+    * foreachBatch's at-least-once replay hits the applied-ledger no-op
+    * instead of double-counting — the count-state analogue of
+    * [[indexTextBatch]]'s anti-join guard, at one-ledger-row cost per
+    * batch. Bootstrap: `writeLmDeltaState` once (any seed batch, e.g.
+    * empty) before the first stream start; compact periodically with
     * [[graft.ext.LangModel.compactLmDeltaState]].
-    */
-  def lmCountsInto(
-      docs: DataFrame,
-      name: String,
-      textCol: String,
-      idCol: String,
-      numBuckets: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .queryName(s"graft-lmcounts-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lmCountsBatch(spark, batch, name, textCol, idCol, numBuckets, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[lmCountsInto]] — factored out so replay
-    * semantics are directly testable.
     */
   def lmCountsBatch(spark: SparkSession, batch: DataFrame, name: String,
       textCol: String, idCol: String, numBuckets: Int, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.col
     graft.ext.LangModel.appendLmDelta(batch.sparkSession, name, batch,
       col(textCol), idCol, numBuckets, s"stream_$batchId")
     Seq("uni", "bi", "applied").foreach(t =>
       spark.catalog.refreshTable(s"${name}_$t"))
   }
 
-  /** Streaming maintenance of a STORED IVFPQ vector index
-    * ([[graft.ext.Similarity.writeIvfPqIndex]]): every micro-batch of new
-    * vectors is assigned + PQ-encoded against the FROZEN quantizers and
-    * appended to the code relation (plus the drift-stats ledger feeding
+  /** One micro-batch of streaming maintenance of a STORED IVFPQ vector
+    * index ([[graft.ext.Similarity.writeIvfPqIndex]]): new vectors are
+    * assigned + PQ-encoded against the FROZEN quantizers and appended to
+    * the code relation (plus the drift-stats ledger feeding
     * [[graft.ext.Similarity.needsRetrain]]). Replay safety: the batch is
     * first anti-joined against the code relation's committed ids, so a
     * redelivered batch appends nothing — codes stay per-document
@@ -334,30 +274,8 @@ object StreamingIngest {
     * checks, the safe side.) Bootstrap: `writeIvfPqIndex` once before the
     * first stream start.
     */
-  def indexVectorsInto(
-      vectors: DataFrame,
-      name: String,
-      idCol: String,
-      vecCol: String,
-      numBuckets: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = vectors.sparkSession
-    vectors.writeStream
-      .queryName(s"graft-ivfpq-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        indexVectorsBatch(spark, batch, name, idCol, vecCol, numBuckets)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[indexVectorsInto]] — factored out for direct
-    * replay testing.
-    */
   def indexVectorsBatch(spark: SparkSession, batch: DataFrame, name: String,
       idCol: String, vecCol: String, numBuckets: Int): Unit = {
-    import org.apache.spark.sql.functions.col
     // state reads on the batch's own session (see appendTextIndexSafe)
     val committed = Tables.readWarehouseBucketed(batch.sparkSession,
       s"${name}_codes")
@@ -374,71 +292,17 @@ object StreamingIngest {
       spark.catalog.refreshTable(s"${name}_$t"))
   }
 
-  /** Streaming maintenance of the LOG-STRUCTURED aggregate state
-    * ([[graft.ext.IncrementalAgg.writeDeltaState]]): every micro-batch's
-    * partial rows land under the batch-id partition, so at-least-once
-    * replay REPLACES its own partition via dynamic overwrite instead of
-    * double-counting — idempotence from the storage layout itself, no
-    * ledger relation. Bootstrap: `writeDeltaState` once (seed tag) before
-    * the first run; compact with
-    * [[graft.ext.IncrementalAgg.compactDeltaState]] between runs only
-    * (see its maintenance-window contract).
-    */
-  def aggInto(
-      events: DataFrame,
-      warehouseDir: String,
-      name: String,
-      groupCols: Seq[String],
-      valueFp: Column,
-      checkpoint: String): StreamingQuery = {
-    events.writeStream
-      .queryName(s"graft-agg-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        aggBatch(batch, warehouseDir, name, groupCols, valueFp, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[aggInto]] — factored out for replay testing. */
-  def aggBatch(batch: DataFrame, warehouseDir: String, name: String,
-      groupCols: Seq[String], valueFp: Column, batchId: Long): Unit =
-    graft.ext.IncrementalAgg.appendDeltaPartition(warehouseDir, name,
-      batch, groupCols, valueFp, s"stream_$batchId")
-
-  /** Streaming maintenance of the MATERIALIZED JOIN view
-    * ([[graft.ext.IncrementalJoin]]), left side streamed against the
-    * stored right side. Replay safety is the [[indexVectorsBatch]]
-    * anti-join guard: a batch row whose `idCol` already sits in the
-    * stored left relation is a redelivery and contributes nothing, so
-    * the delta-rule appends stay per-row exactly-once. (`idCol` must be
-    * unique per left row — the natural primary key of a fact stream.)
-    */
-  def joinLeftInto(
-      left: DataFrame,
-      warehouseDir: String,
-      name: String,
-      keyCol: String,
-      idCol: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = left.sparkSession
-    left.writeStream
-      .queryName(s"graft-join-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        joinLeftBatch(spark, batch, warehouseDir, name, keyCol, idCol)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[joinLeftInto]] — factored out for replay
-    * testing. Delegates to [[graft.ext.IncrementalJoin.appendLeftSafe]],
-    * whose per-RELATION committed-id guards make the batch exactly-once
-    * even when a crash lands between the `_out` and `_left` appends (a
-    * single guard probing only `_left` would re-append the same delta to
-    * `_out` on replay — duplicate join rows).
+  /** One micro-batch of streaming maintenance of the MATERIALIZED JOIN
+    * view ([[graft.ext.IncrementalJoin]]), left side streamed against the
+    * stored right side. Delegates to
+    * [[graft.ext.IncrementalJoin.appendLeftSafe]]: a batch row whose
+    * `idCol` already sits in a stored relation is a redelivery and
+    * contributes nothing to it, and its per-RELATION committed-id guards
+    * make the batch exactly-once even when a crash lands between the
+    * `_out` and `_left` appends (a single guard probing only `_left`
+    * would re-append the same delta to `_out` on replay — duplicate join
+    * rows). (`idCol` must be unique per left row — the natural primary
+    * key of a fact stream.)
     */
   def joinLeftBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, name: String, keyCol: String, idCol: String): Unit = {
@@ -448,136 +312,73 @@ object StreamingIngest {
       spark.catalog.refreshTable(s"${name}_$t"))
   }
 
-  /** Streaming CDC maintenance of the COUNTED join view
-    * ([[graft.ext.IncrementalJoin.appendStoredCounted]]): a left-side
-    * change stream whose rows carry `opCol` ∈ {insert, delete} folds into
-    * the counted state — deletes retract their earlier join contributions
-    * by signed multiplicity, the composition a `Merge` tombstone feed
-    * needs. Replay safety is the counted append's own phase ledger +
-    * read-side distinct (every crash window converges; a completed batch
-    * short-circuits), so this wrapper only signs the rows and names the
-    * batch. Bootstrap: `createStoredCounted` before the first start.
+  /** The ±1 multiplicity of a CDC change batch whose rows carry `opCol`
+    * ∈ {insert, delete}: deletes are −1, inserts +1. Any other value
+    * fails the batch before anything is written.
     */
-  def cdcJoinLeftInto(
-      changes: DataFrame,
-      warehouseDir: String,
-      name: String,
-      keyCol: String,
-      opCol: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .queryName(s"graft-cdcjoin-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cdcJoinLeftBatch(spark, batch, warehouseDir, name, keyCol, opCol,
-          batchId)
-      }
-      .start()
+  private def cdcMult(batch: DataFrame, opCol: String): Column = {
+    val ops = batch.select(col(opCol)).distinct().collect().map(_.getString(0))
+    val bad = ops.filterNot(Set("insert", "delete"))
+    require(bad.isEmpty, s"unknown $opCol values: ${bad.mkString(",")}")
+    when(col(opCol) === "delete", lit(-1L)).otherwise(lit(1L))
   }
 
-  /** One micro-batch of [[cdcJoinLeftInto]] — factored out for replay
-    * testing.
+  /** One micro-batch of streaming CDC maintenance of the COUNTED join
+    * view ([[graft.ext.IncrementalJoin.appendStoredCounted]]): a
+    * left-side change stream whose rows carry `opCol` ∈ {insert, delete}
+    * folds into the counted state — deletes retract their earlier join
+    * contributions by signed multiplicity, the composition a `Merge`
+    * tombstone feed needs. Replay safety is the counted append's own
+    * phase ledger + read-side distinct (every crash window converges; a
+    * completed batch short-circuits), so this batch only signs the rows
+    * and names the batch. Bootstrap: `createStoredCounted` before the
+    * first start.
     */
   def cdcJoinLeftBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, name: String, keyCol: String, opCol: String,
       batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, when}
     import graft.ext.IncrementalJoin
-    val ops = batch.select(col(opCol)).distinct().collect().map(_.getString(0))
-    val bad = ops.filterNot(Set("insert", "delete"))
-    require(bad.isEmpty, s"unknown $opCol values: ${bad.mkString(",")}")
     val signed = batch
-      .withColumn(IncrementalJoin.MultCol,
-        when(col(opCol) === "delete", lit(-1L)).otherwise(lit(1L)))
+      .withColumn(IncrementalJoin.MultCol, cdcMult(batch, opCol))
       .drop(opCol)
     val emptyRight = IncrementalJoin.inserts(
       Tables.readWarehouseBucketed(spark, s"${name}_right")
         .drop(IncrementalJoin.MultCol, IncrementalJoin.BatchCol).limit(0))
     IncrementalJoin.appendStoredCounted(spark, warehouseDir, name,
       signed, emptyRight, keyCol, batchTag = s"stream_$batchId")
-    // the counted append's phase ledger is filesystem marker files (r13),
-    // not a catalog table — only the data relations need a refresh
+    // the counted append's phase ledger is filesystem marker files
+    // (PhaseLedger), not a catalog table — only the data relations need
+    // a refresh
     Seq("left", "right", "out").foreach(t =>
       spark.catalog.refreshTable(s"${name}_$t"))
   }
 
-  /** Streaming CDC maintenance of RETRACTABLE aggregate state
-    * ([[graft.ext.IncrementalAgg.appendRetractable]]): each micro-batch
-    * of signed change rows (`opCol` ∈ {insert, delete}) folds its partial
+  /** One micro-batch of streaming CDC maintenance of RETRACTABLE
+    * aggregate state ([[graft.ext.IncrementalAgg.appendRetractable]]):
+    * signed change rows (`opCol` ∈ {insert, delete}) fold their partial
     * aggregate into a per-batch partition — deletes as negative
     * contributions. Replay safety is the partition-replace contract: a
     * redelivered batch id REPLACES its own partition, so at-least-once
-    * delivery never double-counts (same as [[aggInto]], now with
+    * delivery never double-counts (same as
+    * [[graft.ext.IncrementalAgg.appendDeltaPartition]], now with
     * retractions). Bootstrap: `createRetractable` before the first start.
     */
-  def cdcAggInto(
-      changes: DataFrame,
-      warehouseDir: String,
-      name: String,
-      groupCols: Seq[String],
-      valueFp: Column,
-      opCol: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .queryName(s"graft-cdcagg-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cdcAggBatch(spark, batch, warehouseDir, name, groupCols, valueFp,
-          opCol, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[cdcAggInto]] — factored out for replay testing. */
   def cdcAggBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
       name: String, groupCols: Seq[String], valueFp: Column, opCol: String,
-      batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    val ops = batch.select(col(opCol)).distinct().collect().map(_.getString(0))
-    val bad = ops.filterNot(Set("insert", "delete"))
-    require(bad.isEmpty, s"unknown $opCol values: ${bad.mkString(",")}")
-    val mult = when(col(opCol) === "delete", lit(-1L)).otherwise(lit(1L))
+      batchId: Long): Unit =
     graft.ext.IncrementalAgg.appendRetractable(warehouseDir, name,
-      batch, groupCols, valueFp, mult, s"stream_$batchId")
-  }
+      batch, groupCols, valueFp, cdcMult(batch, opCol), s"stream_$batchId")
 
-  /** Streaming maintenance of the STORED sessionization state
-    * ([[graft.ext.SessionState]]): each micro-batch of events folds into
-    * the `_closed`/`_open` relations under the same gap rule as the
-    * batch form. Replays follow the SCD2 two-phase ledger (a full rerun
-    * of a completed batch is not inert for session state — the batch's
-    * events would extend the ALREADY-advanced open slice): phase
-    * "closed" appends behind the (key, session_start) anti-join guard,
-    * phase "open" replaces the slice; completed batches short-circuit.
-    */
-  def sessionInto(
-      events: DataFrame,
-      warehouseDir: String,
-      name: String,
-      keyCol: String,
-      tsCol: String,
-      valueFp: Column,
-      gap: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .queryName(s"graft-session-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sessionBatch(spark, batch, warehouseDir, name, keyCol, tsCol,
-          valueFp, gap, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[sessionInto]] — factored out for replay
-    * testing. Uses the same `{name}_applied` ledger layout as
-    * [[scdBatch]] (create it with [[ensureScdLedger]]).
+  /** One micro-batch of streaming maintenance of the STORED
+    * sessionization state ([[graft.ext.SessionState]]): events fold into
+    * the `_closed`/`_open` relations under the same gap rule as the batch
+    * form. Replays follow the [[scdBatch]] two-phase ledger
+    * ([[graft.io.PhaseLedger]]; a full rerun of a completed batch is not
+    * inert for session state — the batch's events would extend the
+    * ALREADY-advanced open slice): phase "closed" appends behind the
+    * (key, session_start) anti-join guard, phase "open" replaces the
+    * slice; completed batches short-circuit. Bootstrap:
+    * `SessionState.createStored` (it resets the ledger).
     *
     * Unlike SCD2's phases, the session open-slice replacement is NOT
     * recompute-idempotent once the swap has landed (re-merging the
@@ -591,146 +392,47 @@ object StreamingIngest {
   def sessionBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, name: String, keyCol: String, tsCol: String,
       valueFp: Column, gap: String, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.{col, max}
-    import spark.implicits._
+    import org.apache.spark.sql.functions.max
     if (batch.isEmpty) return
     val tag = s"stream_$batchId"
-    val ledger = s"${name}_applied"
     val stage = new org.apache.hadoop.fs.Path(
       s"$warehouseDir/$name._sess_$tag")
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def marked(phase: String): Boolean =
-      Tables.readWarehouseBucketed(spark, ledger)
-        .filter(col("batch_tag") === tag && col("phase") === phase)
-        .limit(1).count() > 0
-    def mark(phase: String): Unit = {
-      Seq((tag, phase)).toDF("batch_tag", "phase")
-        .write.mode("append").bucketBy(1, "batch_tag").sortBy("batch_tag")
-        .saveAsTable(ledger)
-      spark.catalog.refreshTable(ledger)
+    if (PhaseLedger.marked(spark, warehouseDir, name, tag, "open")) {
+      fs.delete(stage, true); return
     }
-    if (marked("open")) { fs.delete(stage, true); return }
     if (!fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
       graft.ext.SessionState.mergedSessions(spark, warehouseDir, name, batch,
           keyCol, tsCol, valueFp, gap)
         .write.mode("overwrite").parquet(stage.toString)
     val sessions = spark.read.parquet(stage.toString)
     val wm = sessions.agg(max("last_ts")).head().getTimestamp(0)
-    if (!marked("closed")) {
+    if (!PhaseLedger.marked(spark, warehouseDir, name, tag, "closed")) {
       graft.ext.SessionState.appendClosedPhase(spark, warehouseDir, name,
         sessions, keyCol, wm, gap)
       spark.catalog.refreshTable(s"${name}_closed")
-      mark("closed")
+      PhaseLedger.mark(spark, warehouseDir, name, tag, "closed")
     }
     graft.ext.SessionState.replaceOpenPhase(spark, warehouseDir, name,
       sessions, wm, gap)
-    mark("open")
+    PhaseLedger.mark(spark, warehouseDir, name, tag, "open")
     fs.delete(stage, true)
   }
 
-  /** Streaming maintenance of the STORED heavy-hitter summary state
-    * ([[graft.ext.SketchState]]): each micro-batch lands its k-row
-    * weighted Misra-Gries summary in its own `_ingest_batch=stream_<id>`
-    * partition. Replay safety is FREE here — the summary write is a
-    * dynamic partition REPLACE keyed by the batch id, so an
-    * at-least-once re-run overwrites its own partition with identical
-    * rows (the [[cdcAggInto]] contract, no ledger). Serving reads merge
-    * the summaries declaratively and confirm exactly
-    * ([[graft.ext.SketchState.storedHeavyHitters]]).
-    */
-  def hhInto(
-      events: DataFrame,
-      warehouseDir: String,
-      name: String,
-      key: Column,
-      k: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .queryName(s"graft-hh-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hhBatch(spark, batch, warehouseDir, name, key, k, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[hhInto]] — factored out for replay testing. */
-  def hhBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
-      name: String, key: Column, k: Int, batchId: Long): Unit =
-    graft.ext.SketchState.appendHhState(spark, warehouseDir, name, batch,
-      key, k, s"stream_$batchId")
-
-  /** Streaming maintenance of the STORED count-min grid
-    * ([[graft.ext.SketchState.cmsSketch]]): each micro-batch lands its
-    * ≤depth·width-row grid in its own `_ingest_batch=stream_<id>`
-    * partition. Same free replay safety as [[hhInto]] (partition replace
-    * keyed by batch id, deterministic grid content); counter ADDITIVITY
-    * makes the read-time sum-fold exactly equal the one-shot corpus grid
-    * at any micro-batch split, and the per-batch partitions double as
-    * the sliding-window axis
-    * ([[graft.ext.SketchState.readCmsSketchWindow]]).
-    */
-  def cmsInto(
-      events: DataFrame,
-      warehouseDir: String,
-      name: String,
-      key: Column,
-      depth: Int,
-      width: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .queryName(s"graft-cms-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cmsBatch(spark, batch, warehouseDir, name, key, depth, width, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[cmsInto]] — factored out for replay testing. */
-  def cmsBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
-      name: String, key: Column, depth: Int, width: Int,
-      batchId: Long): Unit =
-    graft.ext.SketchState.appendCmsState(spark, warehouseDir, name, batch,
-      key, depth, width, s"stream_$batchId")
-
-  /** Streaming MANIFEST-VERSIONED sink ([[graft.io.ManifestVersioned]]):
-    * each micro-batch commits ONE atomic manifest version replacing
-    * exactly the partitions present in the batch (partition-replace,
-    * the dynamic-overwrite contract) — untouched partitions share the
-    * previous version's files, and every micro-batch boundary stays
-    * time-travelable. EXACTLY-ONCE under foreachBatch's at-least-once
-    * replays WITHOUT a ledger: the commit itself records the batch id
-    * as the manifest note, and a replayed batch whose id already heads
-    * the table short-circuits — a crash BEFORE the manifest commit left
-    * nothing visible (only orphan staging for vacuum), a crash AFTER it
-    * left the batch fully committed. Single-stream-per-table contract
-    * (the note guard reads the head; two writers would interleave ids).
-    * Bootstrap with [[graft.io.ManifestVersioned.writeFull]] first.
-    */
-  def manifestInto(
-      rows: DataFrame,
-      warehouseDir: String,
-      table: String,
-      partCol: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = rows.sparkSession
-    rows.writeStream
-      .queryName(s"graft-manifest-$table")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        manifestBatch(spark, batch, warehouseDir, table, partCol, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[manifestInto]] — factored out for replay
-    * testing.
+  /** One micro-batch of the streaming MANIFEST-VERSIONED sink
+    * ([[graft.io.ManifestVersioned]]): the batch commits ONE atomic
+    * manifest version replacing exactly the partitions present in the
+    * batch (partition-replace, the dynamic-overwrite contract) —
+    * untouched partitions share the previous version's files, and every
+    * micro-batch boundary stays time-travelable. EXACTLY-ONCE under
+    * foreachBatch's at-least-once replays WITHOUT a ledger: the commit
+    * itself records the batch id as the manifest note, and a replayed
+    * batch whose id already heads the table short-circuits — a crash
+    * BEFORE the manifest commit left nothing visible (only orphan staging
+    * for vacuum), a crash AFTER it left the batch fully committed.
+    * Single-stream-per-table contract (the note guard reads the head; two
+    * writers would interleave ids). Bootstrap with
+    * [[graft.io.ManifestVersioned.writeFull]] first.
     */
   def manifestBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, table: String, partCol: String,
@@ -751,7 +453,7 @@ object StreamingIngest {
     * committed versions with zero bespoke offset plumbing: each
     * micro-batch carries the NEW commit markers since the last
     * checkpoint. Rows are (manifest_path, version) — the marker content
-    * is not the payload; [[changeFeedInto]] turns each discovered
+    * is not the payload; [[changeFeedBatch]] turns each discovered
     * version into its row-level change feed with the real (distributed,
     * partition-pruned) read.
     */
@@ -771,38 +473,8 @@ object StreamingIngest {
         regexp_extract(col("manifest_path"), "manifest\\.v(\\d+)$", 1)
           .cast("int"))
 
-  /** Row-level CHANGE-FEED subscription: every version committed to a
-    * manifest table lands in the `outName` warehouse table as
-    * `Merge.changeFeed` rows (version, key, change_type ∈
-    * insert|update|delete, old/new values), one partition per source
-    * version. Source = [[manifestCommitStream]]; the bootstrap version
-    * feeds as inserts. EXACTLY-ONCE under foreachBatch's at-least-once
-    * replays by partition-replace: a batch writes exactly the `version=N`
-    * partitions of the versions it discovered, each a pure function of
-    * the immutable manifest pair — a replay overwrites them with
-    * identical rows (the [[ccInto]] argument). Single-subscriber-per-out-
-    * table contract.
-    */
-  def changeFeedInto(
-      commits: DataFrame,
-      warehouseDir: String,
-      table: String,
-      keyCol: String,
-      outName: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = commits.sparkSession
-    commits.writeStream
-      .queryName(s"graft-changefeed-$table")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        changeFeedBatch(spark, batch, warehouseDir, table, keyCol, outName)
-      }
-      .start()
-  }
-
-  /** STREAMING view maintenance: every commit discovered on the
-    * manifest table's commit log triggers one
+  /** STREAMING view maintenance, one [[manifestCommitStream]] micro-batch:
+    * every discovered commit triggers one
     * [[graft.ext.IncrementalAgg.syncRetractableFromManifest]] — the
     * materialized view follows the table with no poller and no
     * scheduler. The discovered batch is only the TRIGGER: the sync is
@@ -812,34 +484,27 @@ object StreamingIngest {
     * partition-replace / no-op argument the sync makes in batch mode.
     * Single-subscriber-per-view contract (the tag IS the ledger).
     */
-  def viewInto(
-      commits: DataFrame,
-      warehouseDir: String,
-      table: String,
-      viewName: String,
-      keyCol: String,
-      groupCols: Seq[String],
-      valueCols: Seq[String],
-      valueFp: Column,
-      checkpoint: String): StreamingQuery = {
-    val spark = commits.sparkSession
-    commits.writeStream
-      .queryName(s"graft-view-$table")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.ext.IncrementalAgg.syncRetractableFromManifest(spark,
-            warehouseDir, table, viewName, keyCol, groupCols, valueCols,
-            valueFp): Unit
-      }
-      .start()
-  }
+  def viewBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
+      table: String, viewName: String, keyCol: String, groupCols: Seq[String],
+      valueCols: Seq[String], valueFp: Column): Unit =
+    if (!batch.isEmpty)
+      graft.ext.IncrementalAgg.syncRetractableFromManifest(spark,
+        warehouseDir, table, viewName, keyCol, groupCols, valueCols,
+        valueFp): Unit
 
-  /** One micro-batch of [[changeFeedInto]] — factored out for replay
-    * testing. The version list is metadata-scale (one row per commit in
-    * the batch); the feed itself is one distributed, manifest-pruned
-    * read per contiguous version run.
+  /** Row-level CHANGE-FEED subscription, one [[manifestCommitStream]]
+    * micro-batch: every version committed to a manifest table lands in
+    * the `outName` warehouse table as `Merge.changeFeed` rows (version,
+    * key, change_type ∈ insert|update|delete, old/new values), one
+    * partition per source version; the bootstrap version feeds as
+    * inserts. EXACTLY-ONCE under foreachBatch's at-least-once replays by
+    * partition-replace: a batch writes exactly the `version=N`
+    * partitions of the versions it discovered, each a pure function of
+    * the immutable manifest pair — a replay overwrites them with
+    * identical rows. Single-subscriber-per-out-table contract. The
+    * version list is metadata-scale (one row per commit in the batch);
+    * the feed itself is one distributed, manifest-pruned read per
+    * contiguous version run.
     */
   def changeFeedBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, table: String, keyCol: String,
@@ -932,109 +597,17 @@ object StreamingIngest {
     }
   }
 
-  /** Streaming maintenance of the incremental COMPONENT-LABEL state
-    * ([[graft.ext.CcState]]): each micro-batch of new near-dup pair
-    * edges folds into the stored labels via the quotient-graph merge.
-    * Replay safety is [[CcState.appendCcEdges]]'s own partition-replace
-    * contract — a batch's delta is a pure function of strictly-earlier
-    * partitions (the read excludes its own), so an at-least-once re-run
-    * replaces its partition with identical rows; no ledger. Bootstrap:
-    * [[graft.ext.CcState.createCcState]] (batch 0) before the first
-    * stream start; micro-batch ids map to state batches 1+.
+  /** One micro-batch of streaming maintenance of the STORED
+    * perceptual-image band state
+    * ([[graft.ext.Multimodal.appendImageNearDup]]): the batch's image
+    * hashes probe the state, its near-dup pairs land in a per-batch
+    * partition of `{name}_imgpairs`, and its own band rows append
+    * exactly-once (the append's anti-join on already-present asset ids).
+    * Pairs are DETERMINISTIC under replay — a replayed batch finds its
+    * own bands in state, but those cross-matches canonicalize and dedup
+    * to exactly the batch-internal pairs already emitted — so the pairs
+    * write is a pure partition replace, no ledger anywhere.
     */
-  def ccInto(
-      pairs: DataFrame,
-      warehouseDir: String,
-      name: String,
-      aCol: String,
-      bCol: String,
-      checkpoint: String): StreamingQuery = {
-    val spark = pairs.sparkSession
-    pairs.writeStream
-      .queryName(s"graft-cc-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ccBatch(spark, batch, warehouseDir, name, aCol, bCol, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[ccInto]] — factored out for replay testing. */
-  def ccBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
-      name: String, aCol: String, bCol: String, batchId: Long): Unit =
-    graft.ext.CcState.appendCcEdges(spark, warehouseDir, name, batch,
-      aCol, bCol, seq = batchId.toInt + 1)
-
-  /** Streaming maintenance of the STORED EWMA state
-    * ([[graft.ext.EwmaState]]): each ordered micro-batch folds from the
-    * keys' persisted resume points; replay safety is the state's own
-    * partition-replace contract (both output partitions are pure
-    * functions of strictly-earlier partitions — the [[ccInto]]
-    * argument). Ordering contract: the SOURCE must deliver batches in
-    * per-key order (file drops of nightly ts ranges do). Bootstrap:
-    * [[graft.ext.EwmaState.createEwmaState]] (batch 0); micro-batch ids
-    * map to state batches 1+.
-    */
-  def ewmaInto(
-      events: DataFrame,
-      warehouseDir: String,
-      name: String,
-      keyCol: String,
-      orderCol: Column,
-      xFp: Column,
-      num: Long,
-      den: Long,
-      checkpoint: String): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .queryName(s"graft-ewma-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ewmaBatch(spark, batch, warehouseDir, name, keyCol, orderCol, xFp,
-          num, den, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[ewmaInto]] — factored out for replay testing. */
-  def ewmaBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
-      name: String, keyCol: String, orderCol: Column, xFp: Column,
-      num: Long, den: Long, batchId: Long): Unit =
-    graft.ext.EwmaState.appendEwmaBatch(spark, warehouseDir, name, batch,
-      keyCol, orderCol, xFp, num, den, seq = batchId.toInt + 1)
-
-  /** Streaming maintenance of the STORED perceptual-image band state
-    * ([[graft.ext.Multimodal.appendImageNearDup]]): each micro-batch of
-    * image hashes probes the state, emits its near-dup pairs into a
-    * per-batch partition of `{name}_imgpairs`, and appends its own band
-    * rows exactly-once (the append's anti-join on already-present asset
-    * ids). Pairs are DETERMINISTIC under replay — a replayed batch finds
-    * its own bands in state, but those cross-matches canonicalize and
-    * dedup to exactly the batch-internal pairs already emitted — so the
-    * pairs write is a pure partition replace, no ledger anywhere.
-    */
-  def imageNearDupInto(
-      hashes: DataFrame,
-      warehouseDir: String,
-      name: String,
-      idCol: String,
-      maxDist: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = hashes.sparkSession
-    hashes.writeStream
-      .queryName(s"graft-imgdup-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        imageNearDupBatch(spark, batch, warehouseDir, name, idCol, maxDist,
-          batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[imageNearDupInto]]. */
   def imageNearDupBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, name: String, idCol: String, maxDist: Int,
       batchId: Long): Unit = {
@@ -1045,80 +618,47 @@ object StreamingIngest {
       warehouseDir, s"${name}_imgpairs", Seq("_ingest_batch"))
   }
 
-  /** Streaming sub-document contamination screen over the STORED gram
-    * state ([[graft.ext.Dedup.duplicateSpansIncremental]]): each
-    * micro-batch's duplicated spans land in a per-batch partition of
-    * `{name}_spans`, then the batch's grams append to the state. The
-    * span detection is NOT replay-deterministic once its own grams are
-    * in state (every batch gram would read as corpus-duplicated), so the
-    * two steps run under the [[scdBatch]]-style two-phase ledger:
-    * `spans` marked after the partition replace (recompute before the
-    * gram append is deterministic), `grams` marked after the append
-    * (gram duplicates are semantically inert, so a re-append between the
-    * marks is harmless). Bootstrap: [[graft.ext.Dedup.writeSpanState]] +
-    * [[ensureScdLedger]] on the same name.
+  /** One micro-batch of the streaming sub-document contamination screen
+    * over the STORED gram state
+    * ([[graft.ext.Dedup.duplicateSpansIncremental]]): the batch's
+    * duplicated spans land in a per-batch partition of `{name}_spans`,
+    * then the batch's grams append to the state. The span detection is
+    * NOT replay-deterministic once its own grams are in state (every
+    * batch gram would read as corpus-duplicated), so the two steps run
+    * under the [[scdBatch]]-style two-phase ledger
+    * ([[graft.io.PhaseLedger]]): `spans` marked after the partition
+    * replace (recompute before the gram append is deterministic), `grams`
+    * marked after the append (gram duplicates are semantically inert, so
+    * a re-append between the marks is harmless). Bootstrap:
+    * [[graft.ext.Dedup.writeSpanState]] on the same name (it resets the
+    * ledger).
     */
-  def dupSpansInto(
-      docs: DataFrame,
-      warehouseDir: String,
-      name: String,
-      textCol: String,
-      idCol: String,
-      k: Int,
-      minDocs: Int,
-      numBuckets: Int,
-      checkpoint: String): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .queryName(s"graft-dupspans-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dupSpansBatch(spark, batch, warehouseDir, name, textCol, idCol, k,
-          minDocs, numBuckets, batchId)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[dupSpansInto]] — each crash window testable. */
   def dupSpansBatch(spark: SparkSession, batch: DataFrame,
       warehouseDir: String, name: String, textCol: String, idCol: String,
       k: Int, minDocs: Int, numBuckets: Int, batchId: Long): Unit = {
-    import spark.implicits._
     val tag = s"stream_$batchId"
-    val ledger = s"${name}_applied"
-    def marked(phase: String): Boolean =
-      Tables.readWarehouseBucketed(spark, ledger)
-        .filter(col("batch_tag") === tag && col("phase") === phase)
-        .limit(1).count() > 0
-    def mark(phase: String): Unit = {
-      Seq((tag, phase)).toDF("batch_tag", "phase")
-        .write.mode("append").bucketBy(1, "batch_tag").sortBy("batch_tag")
-        .saveAsTable(ledger)
-      spark.catalog.refreshTable(ledger)
-    }
-    if (marked("grams")) return
-    if (!marked("spans")) {
+    if (PhaseLedger.marked(spark, warehouseDir, name, tag, "grams")) return
+    if (!PhaseLedger.marked(spark, warehouseDir, name, tag, "spans")) {
       val spans = graft.ext.Dedup.duplicateSpansIncremental(spark, name,
         batch, col(textCol), idCol, k, minDocs)
       Tables.writeWarehousePartitioned(
         spans.withColumn("_ingest_batch", lit(tag)),
         warehouseDir, s"${name}_spans", Seq("_ingest_batch"))
-      mark("spans")
+      PhaseLedger.mark(spark, warehouseDir, name, tag, "spans")
     }
     graft.ext.Dedup.appendSpanState(spark, name, batch, col(textCol), idCol,
       k, numBuckets)
-    mark("grams")
+    PhaseLedger.mark(spark, warehouseDir, name, tag, "grams")
   }
 
-  /** Streaming maintenance of the STORED SCD2 dimension state
-    * ([[graft.ext.ScdState]]): each micro-batch of new versions folds
-    * into the `_hist`/`_cur` relations. foreachBatch is at-least-once
-    * and a FULL re-run of a completed batch is not inert for SCD2 (the
-    * batch's own current rows would be re-closed at its first version),
-    * so replay safety is a TWO-PHASE batch ledger (`{name}_applied`,
-    * rows (batch_tag, phase)) over [[graft.ext.ScdState]]'s idempotent
-    * phases:
+  /** One micro-batch of streaming maintenance of the STORED SCD2
+    * dimension state ([[graft.ext.ScdState]]): new versions fold into
+    * the `_hist`/`_cur` relations. foreachBatch is at-least-once and a
+    * FULL re-run of a completed batch is not inert for SCD2 (the batch's
+    * own current rows would be re-closed at its first version), so
+    * replay safety is a TWO-PHASE batch ledger ([[graft.io.PhaseLedger]]
+    * marks `stream_<batchId>.<phase>` under `{name}_applied`) over
+    * [[graft.ext.ScdState]]'s idempotent phases:
     *   - `hist` marked after the closed-version append — re-running the
     *     phase before the mark re-derives the same rows and the
     *     (key, valid_from) anti-join drops those already written;
@@ -1128,73 +668,24 @@ object StreamingIngest {
     *     [[graft.io.Tables.replaceWarehouse]];
     *   - a batch whose `cur` mark exists short-circuits entirely.
     * Every window between any two steps therefore replays to the correct
-    * final state. Bootstrap: `ScdState.createStored` + [[ensureScdLedger]]
-    * before the first stream start.
-    */
-  def scdInto(
-      versions: DataFrame,
-      warehouseDir: String,
-      name: String,
-      keyCol: String,
-      versionCol: String,
-      tiebreak: Column,
-      checkpoint: String): StreamingQuery = {
-    val spark = versions.sparkSession
-    versions.writeStream
-      .queryName(s"graft-scd-$name")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scdBatch(spark, batch, warehouseDir, name, keyCol, versionCol,
-          tiebreak, batchId)
-      }
-      .start()
-  }
-
-  /** Create the SCD2 streaming batch ledger if absent (path-based under
-    * the warehouse like every other state relation — a managed table's
-    * leftover directory would collide across driver runs).
-    */
-  def ensureScdLedger(spark: SparkSession, warehouseDir: String,
-      name: String): Unit =
-    if (!spark.catalog.tableExists(s"${name}_applied")) {
-      import spark.implicits._
-      Tables.writeWarehouseBucketed(
-        Seq.empty[(String, String)].toDF("batch_tag", "phase"),
-        warehouseDir, s"${name}_applied", "batch_tag", 1)
-    }
-
-  /** One micro-batch of [[scdInto]] — factored out so each crash window
-    * is directly testable.
+    * final state. Bootstrap: `ScdState.createStored` (it resets the
+    * ledger) before the first stream start.
     */
   def scdBatch(spark: SparkSession, batch: DataFrame, warehouseDir: String,
       name: String, keyCol: String, versionCol: String, tiebreak: Column,
       batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
     val tag = s"stream_$batchId"
-    val ledger = s"${name}_applied"
-    def marked(phase: String): Boolean =
-      Tables.readWarehouseBucketed(spark, ledger)
-        .filter(col("batch_tag") === tag && col("phase") === phase)
-        .limit(1).count() > 0
-    def mark(phase: String): Unit = {
-      Seq((tag, phase)).toDF("batch_tag", "phase")
-        .write.mode("append").bucketBy(1, "batch_tag").sortBy("batch_tag")
-        .saveAsTable(ledger)
-      spark.catalog.refreshTable(ledger)
-    }
-    if (marked("cur")) return
+    if (PhaseLedger.marked(spark, warehouseDir, name, tag, "cur")) return
     val b = graft.ext.ScdState.conformed(spark, warehouseDir, name, batch,
       align = false).localCheckpoint(true)
-    if (!marked("hist")) {
+    if (!PhaseLedger.marked(spark, warehouseDir, name, tag, "hist")) {
       graft.ext.ScdState.appendClosedPhase(spark, warehouseDir, name, b,
         keyCol, versionCol, tiebreak)
       spark.catalog.refreshTable(s"${name}_hist")
-      mark("hist")
+      PhaseLedger.mark(spark, warehouseDir, name, tag, "hist")
     }
     graft.ext.ScdState.replaceCurPhase(spark, warehouseDir, name, b,
       keyCol, versionCol, tiebreak)
-    mark("cur")
+    PhaseLedger.mark(spark, warehouseDir, name, tag, "cur")
   }
 }

@@ -920,9 +920,12 @@ class ManifestVersionedR8Spec extends AnyFunSuite {
     // so the feed must not re-emit k=1)
     ManifestVersioned.writeDelta(spark, wh, "t", fixture((2L, "b", 20L)), "p")
     val ckpt = Files.createTempDirectory("graft-cfeed4-ckpt").toString
-    val q = graft.streaming.StreamingIngest.changeFeedInto(
-      graft.streaming.StreamingIngest.manifestCommitStream(spark, wh, "t"),
-      wh, "t", "k", "t_feed", ckpt)
+    val q = graft.streaming.StreamingIngest.sinkInto(
+        graft.streaming.StreamingIngest.manifestCommitStream(spark, wh, "t"),
+        "graft-changefeed-t", ckpt) { (b, _) =>
+      graft.streaming.StreamingIngest.changeFeedBatch(spark, b, wh, "t", "k",
+        "t_feed")
+    }
     q.awaitTermination(120000)
     val got = spark.read.parquet(s"$wh/t_feed")
       .select("version", "k", "change_type")
@@ -931,9 +934,12 @@ class ManifestVersionedR8Spec extends AnyFunSuite {
     // a later commit is picked up by the NEXT AvailableNow run from the
     // same checkpoint (exactly-once across restarts)
     ManifestVersioned.writeDelta(spark, wh, "t", fixture((1L, "a", 99L)), "p")
-    val q2 = graft.streaming.StreamingIngest.changeFeedInto(
-      graft.streaming.StreamingIngest.manifestCommitStream(spark, wh, "t"),
-      wh, "t", "k", "t_feed", ckpt)
+    val q2 = graft.streaming.StreamingIngest.sinkInto(
+        graft.streaming.StreamingIngest.manifestCommitStream(spark, wh, "t"),
+        "graft-changefeed-t", ckpt) { (b, _) =>
+      graft.streaming.StreamingIngest.changeFeedBatch(spark, b, wh, "t", "k",
+        "t_feed")
+    }
     q2.awaitTermination(120000)
     assert(spark.read.parquet(s"$wh/t_feed")
       .select("version", "k", "change_type")
@@ -956,9 +962,12 @@ class ManifestVersionedR8Spec extends AnyFunSuite {
       fixture((1L, "a", 10L), (2L, "b", 20L)), "p")
     val ckpt = Files.createTempDirectory("graft-vinto-ckpt").toString
     def run(): Unit = {
-      val q = graft.streaming.StreamingIngest.viewInto(
-        graft.streaming.StreamingIngest.manifestCommitStream(spark, wh, "t"),
-        wh, "t", "t_agg", "k", Seq("p"), Seq("v"), col("v"), ckpt)
+      val q = graft.streaming.StreamingIngest.sinkInto(
+          graft.streaming.StreamingIngest.manifestCommitStream(spark, wh, "t"),
+          "graft-view-t", ckpt) { (b, _) =>
+        graft.streaming.StreamingIngest.viewBatch(spark, b, wh, "t", "t_agg",
+          "k", Seq("p"), Seq("v"), col("v"))
+      }
       q.awaitTermination(120000)
     }
     run() // discovers v1 → seeds the view

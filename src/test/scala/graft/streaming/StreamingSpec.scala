@@ -74,11 +74,11 @@ class StreamingSpec extends AnyFunSuite {
 
     def runRound(): Unit = {
       val stream = StreamingIngest.csvStream(spark, src.toString, schema)
-      val q = StreamingIngest.mergeInto(
-        stream, wh, "accounts", "systemid",
-        graft.core.Pipeline.latestOrder,
-        graft.core.Pipeline.bc2adlsTombstone,
-        ckpt, clock)
+      val q = StreamingIngest.sinkInto(stream, "graft-ingest-accounts", ckpt) {
+        (b, _) => StreamingIngest.mergeBatch(spark, b, wh, "accounts",
+          "systemid", graft.core.Pipeline.latestOrder,
+          graft.core.Pipeline.bc2adlsTombstone, clock)
+      }
       q.awaitTermination()
     }
 
@@ -139,11 +139,13 @@ class StreamingSpec extends AnyFunSuite {
     def runRound(rows: Seq[(Long, String)]): Unit = {
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(src)
-      val q = StreamingIngest.dedupInto(
-        spark.readStream.schema(docSchema).parquet(src),
-        wh, "corpus", "stream_docs", "text", "doc_id",
-        numHashes = 8, bands = 4, shingleSize = 3,
-        estJaccardThreshold = 0.5, checkpoint = ckpt)
+      val q = StreamingIngest.sinkInto(
+          spark.readStream.schema(docSchema).parquet(src),
+          "graft-dedup-corpus", ckpt) { (b, id) =>
+        StreamingIngest.dedupBatch(spark, b, id, wh, "corpus", "stream_docs",
+          "text", "doc_id", numHashes = 8, bands = 4, shingleSize = 3,
+          estJaccardThreshold = 0.5)
+      }
       q.awaitTermination()
     }
     rounds.foreach(runRound)
@@ -233,10 +235,12 @@ class StreamingSpec extends AnyFunSuite {
     def runRound(rows: Seq[(Long, String)]): Unit = {
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(src)
-      StreamingIngest.indexTextInto(
-        spark.readStream.schema(docSchema).parquet(src),
-        wh, "stream_tix", "text", "doc_id", numBuckets = 4,
-        checkpoint = ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(docSchema).parquet(src),
+          "graft-textindex-stream_tix", ckpt) { (b, _) =>
+        StreamingIngest.indexTextBatch(spark, b, wh, "stream_tix", "text",
+          "doc_id", numBuckets = 4)
+      }.awaitTermination()
     }
     rounds.foreach(runRound)
 
@@ -281,10 +285,12 @@ class StreamingSpec extends AnyFunSuite {
     def runRound(rows: Seq[(Long, String)]): Unit = {
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(src)
-      StreamingIngest.lmCountsInto(
-        spark.readStream.schema(docSchema).parquet(src),
-        "stream_lm", "text", "doc_id", numBuckets = 4,
-        checkpoint = ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(docSchema).parquet(src),
+          "graft-lmcounts-stream_lm", ckpt) { (b, id) =>
+        StreamingIngest.lmCountsBatch(spark, b, "stream_lm", "text", "doc_id",
+          numBuckets = 4, id)
+      }.awaitTermination()
     }
     rounds.foreach(runRound)
 
@@ -334,10 +340,12 @@ class StreamingSpec extends AnyFunSuite {
       .count()
 
     batch.coalesce(1).write.mode("append").parquet(src)
-    StreamingIngest.indexVectorsInto(
-      spark.readStream.schema(vecSchema).parquet(src),
-      "stream_vix", "vec_id", "embedding", numBuckets = 4,
-      checkpoint = ckpt).awaitTermination()
+    StreamingIngest.sinkInto(
+        spark.readStream.schema(vecSchema).parquet(src),
+        "graft-ivfpq-stream_vix", ckpt) { (b, _) =>
+      StreamingIngest.indexVectorsBatch(spark, b, "stream_vix", "vec_id",
+        "embedding", numBuckets = 4)
+    }.awaitTermination()
 
     val codesOnce = Tables.readWarehouseBucketed(spark, "stream_vix_codes")
       .collect().map(_.toSeq).toSet
@@ -542,9 +550,12 @@ class StreamingSpec extends AnyFunSuite {
       Seq(("b", 2L), ("a", 3L)))
     def runRound(rows: Seq[(String, Long)]): Unit = {
       rows.toDF("g", "v").coalesce(1).write.mode("append").parquet(src)
-      StreamingIngest.aggInto(
-        spark.readStream.schema(evSchema).parquet(src),
-        wh, "sagg", Seq("g"), col("v"), ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(evSchema).parquet(src),
+          "graft-agg-sagg", ckpt) { (b, id) =>
+        IncrementalAgg.appendDeltaPartition(wh, "sagg", b, Seq("g"), col("v"),
+          s"stream_$id")
+      }.awaitTermination()
     }
     rounds.foreach(runRound)
 
@@ -560,8 +571,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === want, "delta fold must equal a from-scratch aggregate")
 
     // at-least-once replay of the LAST micro-batch: partition replace → no-op
-    StreamingIngest.aggBatch(rounds.last.toDF("g", "v"), wh, "sagg",
-      Seq("g"), col("v"), batchId = 1L)
+    IncrementalAgg.appendDeltaPartition(wh, "sagg", rounds.last.toDF("g", "v"),
+      Seq("g"), col("v"), "stream_1")
     assert(state() === streamed, "replayed batch must not double-count")
 
     // compaction (between runs) is a pure representation change
@@ -588,9 +599,11 @@ class StreamingSpec extends AnyFunSuite {
       def runRound(rows: Seq[(Long, Long, String)]): Unit = {
         rows.toDF("lid", "k", "lval").coalesce(1)
           .write.mode("append").parquet(src)
-        StreamingIngest.joinLeftInto(
-          spark.readStream.schema(l0.schema).parquet(src),
-          wh, "sjoin", "k", "lid", ckpt).awaitTermination()
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(l0.schema).parquet(src),
+            "graft-join-sjoin", ckpt) { (b, _) =>
+          StreamingIngest.joinLeftBatch(spark, b, wh, "sjoin", "k", "lid")
+        }.awaitTermination()
       }
       rounds.foreach(runRound)
 
@@ -661,7 +674,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-stream-cdcjoin")
     val wh = root.resolve("wh").toString
     val ckpt = root.resolve("ckpt").toString
-    for (s0 <- Seq("left", "right", "out", "applied"))
+    for (s0 <- Seq("left", "right", "out"))
       spark.sql(s"DROP TABLE IF EXISTS scdc_$s0")
     try {
       val right = Seq((1L, "r1"), (2L, "r2")).toDF("k", "rval")
@@ -678,9 +691,11 @@ class StreamingSpec extends AnyFunSuite {
       def runRound(rows: Seq[(Long, Long, String, String)]): Unit = {
         rows.toDF("lid", "k", "lval", "op").coalesce(1)
           .write.mode("append").parquet(src)
-        StreamingIngest.cdcJoinLeftInto(
-          spark.readStream.schema(schema).parquet(src),
-          wh, "scdc", "k", "op", ckpt).awaitTermination()
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(schema).parquet(src),
+            "graft-cdcjoin-scdc", ckpt) { (b, id) =>
+          StreamingIngest.cdcJoinLeftBatch(spark, b, wh, "scdc", "k", "op", id)
+        }.awaitTermination()
       }
       rounds.foreach(runRound)
 
@@ -703,7 +718,7 @@ class StreamingSpec extends AnyFunSuite {
         batchId = 1L)
       assert(view() === streamed, "replayed batch must not change the view")
     } finally
-      for (s0 <- Seq("left", "right", "out", "applied"))
+      for (s0 <- Seq("left", "right", "out"))
         spark.sql(s"DROP TABLE IF EXISTS scdc_$s0")
   }
 
@@ -725,9 +740,12 @@ class StreamingSpec extends AnyFunSuite {
     def runRound(rows: Seq[(String, Long, Long, String)]): Unit = {
       rows.toDF("g", "id", "v_fp", "op").coalesce(1)
         .write.mode("append").parquet(src)
-      StreamingIngest.cdcAggInto(
-        spark.readStream.schema(schema).parquet(src),
-        wh, "scdcagg", Seq("g"), col("v_fp"), "op", ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(schema).parquet(src),
+          "graft-cdcagg-scdcagg", ckpt) { (b, id) =>
+        StreamingIngest.cdcAggBatch(spark, b, wh, "scdcagg", Seq("g"),
+          col("v_fp"), "op", id)
+      }.awaitTermination()
     }
     rounds.foreach(runRound)
 
@@ -751,8 +769,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-stream-scd")
     val wh = root.resolve("wh").toString
     val ckpt = root.resolve("ckpt").toString
-    for (t0 <- Seq("hist", "applied"))
-      spark.sql(s"DROP TABLE IF EXISTS sscd_$t0")
+    spark.sql("DROP TABLE IF EXISTS sscd_hist")
     try {
       def ts(day: Int, hour: Int) =
         Timestamp.valueOf(f"2024-04-$day%02d $hour%02d:00:00")
@@ -766,15 +783,16 @@ class StreamingSpec extends AnyFunSuite {
 
       ScdState.createStored(spark, wh, "sscd", df(n1), "user_id", "ts",
         col("event_id"), 2)
-      StreamingIngest.ensureScdLedger(spark, wh, "sscd")
 
       val src = root.resolve("in").toString
       def runRound(rows: Seq[(Long, String, String, Timestamp)]): Unit = {
         df(rows).coalesce(1).write.mode("append").parquet(src)
-        StreamingIngest.scdInto(
-          spark.readStream.schema(df(n1).schema).parquet(src),
-          wh, "sscd", "user_id", "ts", col("event_id"), ckpt)
-          .awaitTermination()
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(df(n1).schema).parquet(src),
+            "graft-scd-sscd", ckpt) { (b, id) =>
+          StreamingIngest.scdBatch(spark, b, wh, "sscd", "user_id", "ts",
+            col("event_id"), id)
+        }.awaitTermination()
       }
       runRound(n2)
       runRound(n3)
@@ -818,8 +836,112 @@ class StreamingSpec extends AnyFunSuite {
         col("event_id"), batchId = 9L)
       assert(state() === wantAll)
     } finally
-      for (t0 <- Seq("hist", "applied"))
-        spark.sql(s"DROP TABLE IF EXISTS sscd_$t0")
+      spark.sql("DROP TABLE IF EXISTS sscd_hist")
+  }
+
+  test("re-seeding a ledgered state resets its phase ledger: a fresh-checkpoint stream applies its first batch") {
+    import graft.ext.{Dedup, ScdState, SessionState}
+    import graft.io.PhaseLedger
+    val root = Files.createTempDirectory("graft-stream-reseed")
+    val wh = root.resolve("wh").toString
+    try {
+      def ts(day: Int) = Timestamp.valueOf(f"2024-04-$day%02d 09:00:00")
+      def df(rows: Seq[(Long, String, String, Timestamp)]) =
+        rows.toDF("event_id", "user_id", "event_type", "ts")
+      val n1 = Seq((1L, "A", "a1", ts(1)), (2L, "B", "b1", ts(1)))
+      val n2 = Seq((3L, "A", "a2", ts(5)))
+      def seed(): Unit = ScdState.createStored(spark, wh, "rscd", df(n1),
+        "user_id", "ts", col("event_id"), 2)
+      // each run streams n2 from its own source dir and checkpoint, so its
+      // one micro-batch is tagged stream_0 both times
+      def stream(run: String): Unit = {
+        val src = root.resolve(s"in_$run").toString
+        df(n2).coalesce(1).write.parquet(src)
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(df(n1).schema).parquet(src),
+            "graft-scd-rscd", root.resolve(s"ckpt_$run").toString) { (b, id) =>
+          StreamingIngest.scdBatch(spark, b, wh, "rscd", "user_id", "ts",
+            col("event_id"), id)
+        }.awaitTermination()
+      }
+      val cols = Seq("event_id", "user_id", "valid_from", "valid_to", "is_current")
+      def state() = ScdState.readStored(spark, wh, "rscd")
+        .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      val want = Merge.scdHistory(df(n1 ++ n2), Seq("user_id"), "ts",
+          col("event_id"))
+        .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      seed(); stream("first")
+      assert(state() === want)
+      seed(); stream("second")
+      assert(state() === want,
+        "the re-seeded state's first stream_0 batch must apply, not " +
+          "short-circuit on the earlier run's ledger marks")
+
+      // the session and dup-span seeders reset the same ledger
+      val ev = Seq(("A", Timestamp.valueOf("2024-06-01 10:00:00"), 1L))
+        .toDF("user_id", "ts", "v")
+      SessionState.createStored(spark, wh, "rsess", ev, "user_id", "ts",
+        col("v"), "30 minutes", 2)
+      PhaseLedger.mark(spark, wh, "rsess", "stream_0", "open")
+      SessionState.createStored(spark, wh, "rsess", ev, "user_id", "ts",
+        col("v"), "30 minutes", 2)
+      assert(!PhaseLedger.marked(spark, wh, "rsess", "stream_0", "open"))
+      val docs = Seq(1L -> "alpha beta gamma delta").toDF("doc_id", "text")
+      Dedup.writeSpanState(docs, col("text"), "doc_id", 3, wh, "rspan", 2)
+      PhaseLedger.mark(spark, wh, "rspan", "stream_0", "grams")
+      Dedup.writeSpanState(docs, col("text"), "doc_id", 3, wh, "rspan", 2)
+      assert(!PhaseLedger.marked(spark, wh, "rspan", "stream_0", "grams"))
+    } finally
+      for (t0 <- Seq("rscd_hist", "rsess_closed", "rspan_grams"))
+        spark.sql(s"DROP TABLE IF EXISTS $t0")
+  }
+
+  test("a legacy table-backed phase ledger fails loudly instead of re-applying a batch") {
+    import graft.ext.{IncrementalJoin, ScdState}
+    val root = Files.createTempDirectory("graft-stream-legacy")
+    val wh = root.resolve("wh").toString
+    // the layout the table-backed ledger wrote: a bucketed parquet
+    // relation of (batch_tag, phase) rows at {name}_applied
+    def plantLegacy(name: String, phases: Seq[String]): Unit =
+      Tables.writeWarehouseBucketed(
+        phases.map(("stream_0", _)).toDF("batch_tag", "phase"),
+        wh, s"${name}_applied", "batch_tag", 1)
+    val guard = "pre-marker (table-backed) phase ledger"
+    try {
+      val v1 = Seq((1L, "A", Timestamp.valueOf("2024-04-01 09:00:00")))
+        .toDF("event_id", "user_id", "ts")
+      ScdState.createStored(spark, wh, "lscd", v1, "user_id", "ts",
+        col("event_id"), 2)
+      plantLegacy("lscd", Seq("hist", "cur"))
+      def scd() = ScdState.readStored(spark, wh, "lscd").collect().toSet
+      val before = scd()
+      val v2 = Seq((2L, "A", Timestamp.valueOf("2024-04-05 09:00:00")))
+        .toDF("event_id", "user_id", "ts")
+      val e1 = intercept[IllegalArgumentException] {
+        StreamingIngest.scdBatch(spark, v2, wh, "lscd", "user_id", "ts",
+          col("event_id"), batchId = 0L)
+      }
+      assert(e1.getMessage.contains(guard))
+      assert(scd() === before, "the guarded batch must not touch the state")
+
+      val right = Seq((1L, "r1")).toDF("k", "rval")
+      val left = Seq((100L, 1L)).toDF("lid", "k")
+      IncrementalJoin.createStoredCounted(spark, wh, "lcj", left, right, "k", 2)
+      plantLegacy("lcj", Seq("out", "left", "right"))
+      def view() = IncrementalJoin.readStoredCounted(spark, "lcj")
+        .collect().toSeq.map(_.toSeq).sortBy(_.toString)
+      val viewBefore = view()
+      val e2 = intercept[IllegalArgumentException] {
+        IncrementalJoin.appendStoredCounted(spark, wh, "lcj",
+          IncrementalJoin.inserts(Seq((101L, 1L)).toDF("lid", "k")),
+          IncrementalJoin.inserts(right.limit(0)), "k", batchTag = "stream_0")
+      }
+      assert(e2.getMessage.contains(guard))
+      assert(view() === viewBefore, "the guarded batch must not touch the view")
+    } finally
+      for (t0 <- Seq("lscd_hist", "lscd_applied", "lcj_left", "lcj_right",
+          "lcj_out", "lcj_applied"))
+        spark.sql(s"DROP TABLE IF EXISTS $t0")
   }
 
   test("streaming session ingest: stream ≡ one-pass sessionize; staged replay safe in every window") {
@@ -828,8 +950,7 @@ class StreamingSpec extends AnyFunSuite {
     val src = root.resolve("ev").toString
     val wh = root.resolve("wh").toString
     val ckpt = root.resolve("ckpt").toString
-    for (t0 <- Seq("closed", "applied"))
-      spark.sql(s"DROP TABLE IF EXISTS ssess_$t0")
+    spark.sql("DROP TABLE IF EXISTS ssess_closed")
     try {
       def tsv(day: Int, h: Int, m: Int) =
         java.sql.Timestamp.valueOf(f"2024-06-$day%02d $h%02d:$m%02d:00")
@@ -844,14 +965,15 @@ class StreamingSpec extends AnyFunSuite {
       SessionState.createStored(spark, wh, "ssess",
         rounds.head.toDF("user_id", "ts", "v"), "user_id", "ts", col("v"),
         "30 minutes", 2)
-      StreamingIngest.ensureScdLedger(spark, wh, "ssess")
       rounds.tail.foreach { rows =>
         rows.toDF("user_id", "ts", "v").coalesce(1)
           .write.mode("append").parquet(src)
-        StreamingIngest.sessionInto(
-          spark.readStream.schema(evSchema).parquet(src),
-          wh, "ssess", "user_id", "ts", col("v"), "30 minutes",
-          ckpt).awaitTermination()
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(evSchema).parquet(src),
+            "graft-session-ssess", ckpt) { (b, id) =>
+          StreamingIngest.sessionBatch(spark, b, wh, "ssess", "user_id", "ts",
+            col("v"), "30 minutes", id)
+        }.awaitTermination()
       }
       def state() = SessionState.readStored(spark, wh, "ssess", "user_id")
         .as[(String, java.sql.Timestamp, java.sql.Timestamp, Long, Long)]
@@ -894,8 +1016,7 @@ class StreamingSpec extends AnyFunSuite {
       val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(stage), "staging must be swept after the final mark")
     } finally
-      for (t0 <- Seq("closed", "applied"))
-        spark.sql(s"DROP TABLE IF EXISTS ssess_$t0")
+      spark.sql("DROP TABLE IF EXISTS ssess_closed")
   }
 
   test("streaming heavy-hitter ingest: stored summaries confirm like one batch pass, replay inert") {
@@ -912,9 +1033,12 @@ class StreamingSpec extends AnyFunSuite {
       Seq.fill(120)("h2") ++ (231 to 350).map(i => s"t$i"))
     def runRound(toks: Seq[String]): Unit = {
       toks.toDF("tok").coalesce(1).write.mode("append").parquet(src)
-      StreamingIngest.hhInto(
-        spark.readStream.schema(tokSchema).parquet(src),
-        wh, "shh", col("tok"), k = 4, ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(tokSchema).parquet(src),
+          "graft-hh-shh", ckpt) { (b, id) =>
+        SketchState.appendHhState(spark, wh, "shh", b, col("tok"), k = 4,
+          s"stream_$id")
+      }.awaitTermination()
     }
     rounds.foreach(runRound)
 
@@ -927,8 +1051,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(confirmed() === Map("h1" -> 400L, "h2" -> 250L))
 
     // at-least-once replay of the last micro-batch: partition replace
-    StreamingIngest.hhBatch(spark, rounds.last.toDF("tok"), wh, "shh",
-      col("tok"), k = 4, batchId = 2L)
+    SketchState.appendHhState(spark, wh, "shh", rounds.last.toDF("tok"),
+      col("tok"), k = 4, "stream_2")
     assert(SketchState.hhStateTotal(spark, wh, "shh") === all.size.toLong)
     assert(confirmed() === Map("h1" -> 400L, "h2" -> 250L))
   }
@@ -946,9 +1070,11 @@ class StreamingSpec extends AnyFunSuite {
     val batches = Seq(Seq(("a", 1L)), Seq(("b", 2L), ("c", 3L)))
     batches.foreach { rows =>
       rows.toDF("p", "v").coalesce(1).write.mode("append").parquet(src)
-      StreamingIngest.manifestInto(
-        spark.readStream.schema(rowSchema).parquet(src),
-        wh, "t", "p", ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(rowSchema).parquet(src),
+          "graft-manifest-t", ckpt) { (b, id) =>
+        StreamingIngest.manifestBatch(spark, b, wh, "t", "p", id)
+      }.awaitTermination()
     }
     def cur() = ManifestVersioned.read(spark, wh, "t")
       .select("p", "v").as[(String, Long)].collect().toSet
@@ -985,9 +1111,12 @@ class StreamingSpec extends AnyFunSuite {
     CcState.createCcState(spark, wh, "scc", b0.toDF("a", "b"), "a", "b")
     rounds.foreach { edges =>
       edges.toDF("a", "b").coalesce(1).write.mode("append").parquet(src)
-      StreamingIngest.ccInto(
-        spark.readStream.schema(pairSchema).parquet(src),
-        wh, "scc", "a", "b", ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(pairSchema).parquet(src),
+          "graft-cc-scc", ckpt) { (b, id) =>
+        CcState.appendCcEdges(spark, wh, "scc", b, "a", "b",
+          seq = id.toInt + 1)
+      }.awaitTermination()
     }
     def labels() = CcState.readCcLabels(spark, wh, "scc")
       .as[(Long, Long)].collect().toMap
@@ -997,8 +1126,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(labels() === want,
       "streamed label chain must equal the from-scratch components")
     // at-least-once replay of the last micro-batch
-    StreamingIngest.ccBatch(spark, rounds.last.toDF("a", "b"), wh, "scc",
-      "a", "b", batchId = 1L)
+    CcState.appendCcEdges(spark, wh, "scc", rounds.last.toDF("a", "b"),
+      "a", "b", seq = 2)
     assert(labels() === want, "replayed micro-batch must not change labels")
   }
 
@@ -1016,9 +1145,12 @@ class StreamingSpec extends AnyFunSuite {
       rows.take(2).toDF("k", "o", "x"), "k", col("o"), col("x"), 2L, 10L)
     Seq(rows.slice(2, 4), rows.drop(4)).foreach { r =>
       r.toDF("k", "o", "x").coalesce(1).write.mode("append").parquet(src)
-      StreamingIngest.ewmaInto(
-        spark.readStream.schema(schema).parquet(src),
-        wh, "sew", "k", col("o"), col("x"), 2L, 10L, ckpt).awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(schema).parquet(src),
+          "graft-ewma-sew", ckpt) { (b, id) =>
+        EwmaState.appendEwmaBatch(spark, wh, "sew", b, "k", col("o"),
+          col("x"), 2L, 10L, seq = id.toInt + 1)
+      }.awaitTermination()
     }
     def series() = EwmaState.readEwmaSeries(spark, wh, "sew")
       .select("o", "s_fp").as[(Long, Long)].collect().toMap
@@ -1027,8 +1159,8 @@ class StreamingSpec extends AnyFunSuite {
       .select((col("seq") - 1).cast("long"), col("s_fp"))
       .as[(Long, Long)].collect().toMap
     assert(series() === want, "streamed fold must equal the one-shot fold")
-    StreamingIngest.ewmaBatch(spark, rows.drop(4).toDF("k", "o", "x"),
-      wh, "sew", "k", col("o"), col("x"), 2L, 10L, batchId = 1L)
+    EwmaState.appendEwmaBatch(spark, wh, "sew", rows.drop(4).toDF("k", "o", "x"),
+      "k", col("o"), col("x"), 2L, 10L, seq = 2)
     assert(series() === want, "replayed micro-batch must not change the series")
   }
 
@@ -1058,9 +1190,12 @@ class StreamingSpec extends AnyFunSuite {
       val schema = hashesOf(b0).schema
       rounds.foreach { r =>
         hashesOf(r).coalesce(1).write.mode("append").parquet(src)
-        StreamingIngest.imageNearDupInto(
-          spark.readStream.schema(schema).parquet(src),
-          wh, "simg", "asset_id", maxDist = 1, ckpt).awaitTermination()
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(schema).parquet(src),
+            "graft-imgdup-simg", ckpt) { (b, id) =>
+          StreamingIngest.imageNearDupBatch(spark, b, wh, "simg", "asset_id",
+            maxDist = 1, id)
+        }.awaitTermination()
       }
       def pairsOf(tag: String) = Tables.readWarehouse(spark, wh, "simg_imgpairs")
         .filter(col("_ingest_batch") === tag)
@@ -1086,7 +1221,7 @@ class StreamingSpec extends AnyFunSuite {
     val wh = root.resolve("wh").toString
     val src = root.resolve("docs").toString
     val ckpt = root.resolve("ckpt").toString
-    for (t0 <- Seq("sspan_grams", "espan_grams", "sspan_applied"))
+    for (t0 <- Seq("sspan_grams", "espan_grams"))
       spark.sql(s"DROP TABLE IF EXISTS $t0")
     try {
       val mk = (rows: Seq[(Long, String)]) => rows.toDF("doc_id", "text")
@@ -1108,14 +1243,15 @@ class StreamingSpec extends AnyFunSuite {
         "fixture must exercise both corpus- and cross-batch overlap")
       // streaming twin
       Dedup.writeSpanState(mk(b0), col("text"), "doc_id", 3, wh, "sspan", 2)
-      StreamingIngest.ensureScdLedger(spark, wh, "sspan")
       val schema = mk(b0).schema
       rounds.foreach { r =>
         mk(r).coalesce(1).write.mode("append").parquet(src)
-        StreamingIngest.dupSpansInto(
-          spark.readStream.schema(schema).parquet(src),
-          wh, "sspan", "text", "doc_id", k = 3, minDocs = 2, numBuckets = 2,
-          ckpt).awaitTermination()
+        StreamingIngest.sinkInto(
+            spark.readStream.schema(schema).parquet(src),
+            "graft-dupspans-sspan", ckpt) { (b, id) =>
+          StreamingIngest.dupSpansBatch(spark, b, wh, "sspan", "text",
+            "doc_id", k = 3, minDocs = 2, numBuckets = 2, id)
+        }.awaitTermination()
       }
       def spansOf(tag: String) = Tables.readWarehouse(spark, wh, "sspan_spans")
         .filter(col("_ingest_batch") === tag)
@@ -1135,10 +1271,7 @@ class StreamingSpec extends AnyFunSuite {
         .withColumn("_ingest_batch", lit("stream_2"))
       Tables.writeWarehousePartitioned(sentinel, wh, "sspan_spans",
         Seq("_ingest_batch"))
-      Seq(("stream_2", "spans")).toDF("batch_tag", "phase")
-        .write.mode("append").bucketBy(1, "batch_tag").sortBy("batch_tag")
-        .saveAsTable("sspan_applied")
-      spark.catalog.refreshTable("sspan_applied")
+      graft.io.PhaseLedger.mark(spark, wh, "sspan", "stream_2", "spans")
       val b3 = Seq(30L -> "alpha beta gamma more words beyond")
       StreamingIngest.dupSpansBatch(spark, mk(b3), wh, "sspan",
         "text", "doc_id", 3, 2, 2, batchId = 2L)
@@ -1152,7 +1285,7 @@ class StreamingSpec extends AnyFunSuite {
       val stored = grams.select("gram_hash").as[Long].collect().toSet
       assert(b3grams.subsetOf(stored), "the gram phase must still complete")
     } finally
-      for (t0 <- Seq("sspan_grams", "espan_grams", "sspan_applied"))
+      for (t0 <- Seq("sspan_grams", "espan_grams"))
         spark.sql(s"DROP TABLE IF EXISTS $t0")
   }
 
@@ -1169,10 +1302,12 @@ class StreamingSpec extends AnyFunSuite {
       (50 to 90).flatMap(i => Seq.fill(i % 3 + 1)(s"t$i")))
     rounds.foreach { toks =>
       toks.toDF("tok").coalesce(1).write.mode("append").parquet(src)
-      StreamingIngest.cmsInto(
-        spark.readStream.schema(tokSchema).parquet(src),
-        wh, "scms", col("tok"), depth = 4, width = 64, ckpt)
-        .awaitTermination()
+      StreamingIngest.sinkInto(
+          spark.readStream.schema(tokSchema).parquet(src),
+          "graft-cms-scms", ckpt) { (b, id) =>
+        SketchState.appendCmsState(spark, wh, "scms", b, col("tok"),
+          depth = 4, width = 64, s"stream_$id")
+      }.awaitTermination()
     }
     def grid(df: org.apache.spark.sql.DataFrame): Map[(Int, Long), Long] =
       df.select("row_i", "bucket", "cnt").as[(Int, Long, Long)]
@@ -1182,8 +1317,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(grid(SketchState.readCmsSketch(spark, wh, "scms")) === oneShot,
       "streamed per-batch grids must sum-fold to the one-shot grid")
     // at-least-once replay of the last micro-batch: partition replace
-    StreamingIngest.cmsBatch(spark, rounds.last.toDF("tok"), wh, "scms",
-      col("tok"), 4, 64, batchId = 2L)
+    SketchState.appendCmsState(spark, wh, "scms", rounds.last.toDF("tok"),
+      col("tok"), 4, 64, "stream_2")
     assert(grid(SketchState.readCmsSketch(spark, wh, "scms")) === oneShot,
       "replayed micro-batch must not change the grid")
   }
