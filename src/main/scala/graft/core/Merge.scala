@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{coalesce, col, lead, lit, row_number, when}
+import org.apache.spark.sql.functions.{coalesce, col, lead, lit, max, row_number, when}
 import org.apache.spark.sql.types.DataType
 
 /** The merge core (SURVEY.md §2.3 J1, §2.5 W1, §2.7 U2) — the semantic heart of
@@ -168,6 +168,45 @@ object Merge {
       Seq(keyCol),
       col(pri).desc +: order)
       .drop(pri)
+  }
+
+  /** [[merge]] (or [[mergeSourceWins]] under `sourceWins`) in ONE
+    * shuffle, for a layout whose `clusterCols` are pure functions of
+    * `keyCol` (a key-bucketed table): the union is hash-partitioned by
+    * `clusterCols` once, and both the tombstone delete and latest-wins
+    * run as window functions over (clusterCols, key) inside that
+    * partitioning — one sort, no anti-join. Every row of a key shares
+    * its cluster value, so the (clusterCols, key) groups are exactly the
+    * key groups [[merge]] ranks (NULL keys group together, as the
+    * null-safe tombstone join matches them). Each cluster value lands
+    * in exactly one task, so a partitioned write of the result writes
+    * one file per cluster value.
+    */
+  def mergeClustered(
+      target: DataFrame,
+      change: DataFrame,
+      keyCol: String,
+      clusterCols: Seq[String],
+      order: Seq[Column],
+      isTombstone: Column,
+      sourceWins: Boolean = false): DataFrame = {
+    val pri = "__graft_pri"
+    val (unioned, tomb, ord) =
+      if (!sourceWins) (alignedUnion(target, change), isTombstone, order)
+      else (alignedUnion(target.withColumn(pri, lit(0)),
+          change.withColumn(pri, lit(1))),
+        isTombstone && col(pri) === 1, col(pri).desc +: order)
+    val w = Window.partitionBy((clusterCols :+ keyCol).map(col): _*)
+      .orderBy(ord: _*)
+    val whole = w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val out = unioned.repartition(clusterCols.map(col): _*)
+      .select(col("*"),
+        max(when(tomb, 1).otherwise(0)).over(whole).as("__graft_tomb"),
+        row_number().over(w).as("__graft_rn"))
+      .filter(col("__graft_tomb") === 0 && col("__graft_rn") === 1)
+      .drop("__graft_tomb", "__graft_rn")
+    if (sourceWins) out.drop(pri) else out
   }
 
   /** CDC change feed — classify what the night's merge DID to each key:

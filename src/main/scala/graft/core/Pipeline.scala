@@ -42,10 +42,17 @@ object Pipeline {
     *    scale ceiling: night N rewrites all N nights of data.
     *  - [[MergeMode]]: route the change batch through the substrate's
     *    keyed merge ([[graft.io.MergeCapableWarehouse]]) — only the
-    *    partitions holding changed keys are read or rewritten, so a
-    *    nightly commit is O(batch), not O(table). Requires a
-    *    merge-capable adapter (the manifest substrate); semantics are
-    *    bit-identical to OverwriteMode by spec.
+    *    partitions holding changed keys are read or rewritten.
+    *    Requires a merge-capable adapter (the manifest substrate);
+    *    semantics are bit-identical to OverwriteMode by spec. The
+    *    manifest substrate hashes keys into 8 buckets, declared on
+    *    first sight as the generated shard column `keybucket(8, key)`;
+    *    a batch scattered over the key space touches every one of the
+    *    8, so such a night still rewrites the table, now in one pass:
+    *    the change is read once, the touched buckets come off its own
+    *    rows, one shuffle merges them, and each bucket is written as
+    *    one file. Only a batch clustered on few buckets commits
+    *    O(batch).
     */
   sealed trait LoadMode
   case object OverwriteMode extends LoadMode
@@ -141,10 +148,10 @@ object Pipeline {
           // interrupted swap forward at the next startup.
           cfg.adapter.replace(spark, cfg.warehouseDir, table, merged)
         case MergeMode =>
-          // O(batch): same Merge.merge semantics, applied to the
-          // partition slice holding the changed keys instead of the
-          // whole table — untouched partitions are neither read nor
-          // rewritten (the substrate's MVCC commit is the barrier)
+          // same Merge.merge semantics, applied to the buckets holding
+          // the changed keys instead of the whole table — untouched
+          // buckets are neither read nor rewritten (the substrate's
+          // MVCC commit is the barrier)
           cfg.mergeable.mergeChanges(spark, cfg.warehouseDir, table,
             change, cfg.keyCol, latestOrder, bc2adlsTombstone)
       }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{PhaseLedger, Tables}
 
 /** Count-based bigram language-model scoring — the CCNet-style "does this
   * document look like the reference corpus" quality filter: train n-gram
@@ -149,12 +149,14 @@ object LangModel {
     * Counts are decomposable, so delta-sum ≡ retrain on the union corpus
     * (the declared query pins it against the from-scratch oracle).
     *
-    * Replay safety: `batchTag` names each ingested batch in the
-    * `<name>_applied` ledger; re-appending an applied tag is a no-op, so
-    * an at-least-once runner (foreachBatch, retried orchestration) can
-    * repeat a batch without double-counting — the count-state analogue
-    * of [[Relevance.appendTextIndexSafe]]'s anti-join guard, at
-    * one-ledger-row cost. Periodic [[compactLmDeltaState]] folds
+    * Replay safety: `batchTag` names each ingested batch in a two-phase
+    * [[graft.io.PhaseLedger]] (`uni`, `bi`) under the session warehouse
+    * dir; each phase is marked right after its append lands, so an
+    * at-least-once runner (foreachBatch, retried orchestration) can
+    * repeat a batch — even one that died between its two appends —
+    * without double-counting: the replay skips every phase already
+    * marked. Seeding resets the ledger and marks the seed batch.
+    * Periodic [[compactLmDeltaState]] folds
     * accumulated deltas back to one row per key (a pure representation
     * change — readers see identical sums).
     */
@@ -162,41 +164,45 @@ object LangModel {
       warehouseDir: String, name: String, numBuckets: Int,
       batchTag: String): Unit = {
     val spark = train.sparkSession
-    import spark.implicits._
+    val ledger = ledgerRoot(spark)
+    PhaseLedger.reset(spark, ledger, name)
     Tables.writeWarehouseBucketed(unigramCounts(train, text),
       warehouseDir, s"${name}_uni", "w", numBuckets)
     Tables.writeWarehouseBucketed(bigramCounts(train, text, idCol),
       warehouseDir, s"${name}_bi", "w1", numBuckets)
-    Tables.writeWarehouseBucketed(Seq(batchTag).toDF("batch_tag"),
-      warehouseDir, s"${name}_applied", "batch_tag", 1)
+    Seq("uni", "bi").foreach(PhaseLedger.mark(spark, ledger, name, batchTag, _))
   }
 
   /** Append one batch's count deltas (see [[writeLmDeltaState]]).
-    * Idempotent per `batchTag`: an already-applied tag returns without
-    * writing. The ledger probe is a 1-column scan of a rows-per-batch
-    * relation — metadata scale.
+    * Idempotent per `batchTag` and phase: a replay skips each of the
+    * unigram and bigram appends its ledger marks as landed. A probe is
+    * one filesystem `exists`, no Spark job.
     */
   def appendLmDelta(spark: SparkSession, name: String, batch: DataFrame,
       text: Column, idCol: String, numBuckets: Int,
       batchTag: String): Unit = {
-    import spark.implicits._
-    val applied = Tables.readWarehouseBucketed(spark, s"${name}_applied")
-      .filter(col("batch_tag") === batchTag).limit(1).count() > 0
-    if (!applied) {
+    val ledger = ledgerRoot(spark)
+    if (!PhaseLedger.marked(spark, ledger, name, batchTag, "uni")) {
       unigramCounts(batch, text)
         .write.mode("append")
         .bucketBy(numBuckets, "w").sortBy("w")
         .saveAsTable(s"${name}_uni")
+      PhaseLedger.mark(spark, ledger, name, batchTag, "uni")
+    }
+    if (!PhaseLedger.marked(spark, ledger, name, batchTag, "bi")) {
       bigramCounts(batch, text, idCol)
         .write.mode("append")
         .bucketBy(numBuckets, "w1").sortBy("w1")
         .saveAsTable(s"${name}_bi")
-      Seq(batchTag).toDF("batch_tag")
-        .write.mode("append")
-        .bucketBy(1, "batch_tag").sortBy("batch_tag")
-        .saveAsTable(s"${name}_applied")
+      PhaseLedger.mark(spark, ledger, name, batchTag, "bi")
     }
   }
+
+  /** The delta state's ledger root: the session warehouse dir, where
+    * [[appendLmDelta]]'s catalog appends resolve their tables too.
+    */
+  private def ledgerRoot(spark: SparkSession): String =
+    spark.conf.get("spark.sql.warehouse.dir")
 
   /** [[scoreDocs]] over the delta state: read-time merge (per-key sums,
     * co-located on the bucket layout) then the standard scoring joins —

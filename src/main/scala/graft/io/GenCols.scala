@@ -16,6 +16,7 @@ import org.apache.spark.sql.types._
   *   graft.generated.p_yr   = years(event_ts)    -- UTC year
   *   graft.generated.p_bkt  = bucket(16, id)     -- pmod(id, 16)
   *   graft.generated.p_rng  = trunc(1000, id)    -- id div 1000
+  *   graft.generated.p_key  = keybucket(8, id)   -- 'k' || pmod(xxhash64(id), 8)
   * }}}
   *
   * and the engine takes over both ends of the contract:
@@ -55,6 +56,15 @@ import org.apache.spark.sql.types._
   * NULL maps because every transform is null-in-null-out — and the
   * caller always applies its original residual filter, so a
   * derivation miss costs pruning opportunity, never correctness.
+  * The one exception to null-in-null-out is `keybucket`: xxhash64
+  * skips NULL inputs, so a NULL key hashes to the seed and lands in a
+  * real bucket — IS [NOT] NULL therefore derives nothing through it.
+  *
+  * `keybucket(n, key)` is the hash-shard layout of a keyed table (the
+  * manifest warehouse adapter's merge layout declares its shard column
+  * this way): the bucket is a pure function of the key, so a change
+  * batch's touched buckets are exactly the buckets of its own rows —
+  * the keyed merge needs no locate probe against the stored table.
   */
 object GenCols {
 
@@ -66,7 +76,7 @@ object GenCols {
       src: String)
 
   private val SpecRe = """(?i)\s*(days|hours|months|years)\s*\(\s*([A-Za-z_][\w]*)\s*\)\s*""".r
-  private val SpecArgRe = """(?i)\s*(bucket|trunc)\s*\(\s*(\d+)\s*,\s*([A-Za-z_][\w]*)\s*\)\s*""".r
+  private val SpecArgRe = """(?i)\s*(bucket|trunc|keybucket)\s*\(\s*(\d+)\s*,\s*([A-Za-z_][\w]*)\s*\)\s*""".r
 
   /** Parse every `graft.generated.*` property; unknown spellings throw
     * (a silently-ignored declaration would skip the write-side
@@ -87,7 +97,7 @@ object GenCols {
           case other => throw new IllegalArgumentException(
             s"unparseable generated-column spec $k = '$other' — expected " +
               "days(src) | hours(src) | months(src) | years(src) | " +
-              "bucket(n, src) | trunc(n, src)")
+              "bucket(n, src) | trunc(n, src) | keybucket(n, src)")
         }
     }.sortBy(_.genCol)
 
@@ -101,6 +111,11 @@ object GenCols {
     case _ => false
   }
 
+  private def atomic(dt: DataType): Boolean = dt match {
+    case _: ArrayType | _: MapType | _: StructType => false
+    case _ => true
+  }
+
   /** The transform's output type for a given source type; None = the
     * (fn, srcType) pair is not admitted.
     */
@@ -112,6 +127,7 @@ object GenCols {
         srcType == TimestampNTZType => Some(LongType)
       case "bucket" if integral(srcType) => Some(IntegerType)
       case "trunc" if integral(srcType) => Some(LongType)
+      case "keybucket" if atomic(srcType) => Some(StringType)
       case _ => None
     }
 
@@ -173,6 +189,8 @@ object GenCols {
         // division) — monotone for a positive divisor, and exactly
         // replayable driver-side as `x / n` (property-pinned)
         expr(s"`${s.src}` div ${s.arg.get}")
+      case "keybucket" =>
+        concat(lit("k"), pmod(xxhash64(c), lit(s.arg.get)).cast("string"))
       case other => throw new IllegalArgumentException(
         s"unknown transform $other")
     }
@@ -246,6 +264,17 @@ object GenCols {
     case "bucket" => longOf(v).map(x =>
       Int.box(Math.floorMod(x, s.arg.get).toInt))
     case "trunc" => longOf(v).map(x => Long.box(x / s.arg.get))
+    case "keybucket" => v match {
+      // Spark's xxhash64 (seed 42) over the UTF-8 bytes; string literals
+      // only — [[derivedPreds]] also requires a STRING source column,
+      // since the hash of a value differs across its types
+      case str: String =>
+        val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+          .hash(org.apache.spark.unsafe.types.UTF8String.fromString(str),
+            StringType, 42L)
+        Some("k" + Math.floorMod(h, s.arg.get))
+      case _ => None
+    }
     case _ => None
   }
 
@@ -268,7 +297,8 @@ object GenCols {
     val types = schema.map(_.fields.map(f => f.name -> f.dataType).toMap)
       .getOrElse(Map.empty[String, DataType])
     specs.flatMap { s =>
-      val ok = types.get(s.src).forall(t => deriveTz || !tzSensitive(s, t))
+      val ok = types.get(s.src).forall(t => deriveTz || !tzSensitive(s, t)) &&
+        (s.fn != "keybucket" || types.get(s.src).contains(StringType))
       if (!ok) Nil
       else preds.flatMap {
         case ZoneEq(c, v) if c == s.src =>
@@ -286,9 +316,9 @@ object GenCols {
           deriveLit(s, v).map(ZoneLe(s.genCol, _)).toSeq
         case ZoneLt(c, v) if c == s.src && monotone(s.fn) =>
           deriveLit(s, v).map(ZoneLe(s.genCol, _)).toSeq
-        case ZoneIsNull(c) if c == s.src =>
+        case ZoneIsNull(c) if c == s.src && s.fn != "keybucket" =>
           Seq(ZoneIsNull(s.genCol)) // null-in-null-out
-        case ZoneNotNull(c) if c == s.src =>
+        case ZoneNotNull(c) if c == s.src && s.fn != "keybucket" =>
           Seq(ZoneNotNull(s.genCol))
         case _ => Nil
       }

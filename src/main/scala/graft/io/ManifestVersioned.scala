@@ -442,9 +442,11 @@ object ManifestVersioned {
     * NULL, which passes, exactly as the written files will read back.
     */
   private def enforceChecks(spark: SparkSession, warehouseDir: String,
-      table: String, delta: DataFrame): Unit = {
-    val carried = generatedColumns(spark, warehouseDir, table)
-      .filter(s => delta.columns.contains(s.genCol))
+      table: String, delta: DataFrame, verifyGen: Boolean = true): Unit = {
+    val carried =
+      if (!verifyGen) Nil
+      else generatedColumns(spark, warehouseDir, table)
+        .filter(s => delta.columns.contains(s.genCol))
     val declared = checks(spark, warehouseDir, table)
     if (carried.isEmpty && declared.isEmpty) return // the common fast path
     val conformed = manifestSchema(spark, warehouseDir, table)
@@ -581,6 +583,17 @@ object ManifestVersioned {
     val base = root(warehouseDir, table)
     val (headers, _) = loadManifest(fsOf(spark, base),
       manifestPath(base, resolve(spark, warehouseDir, table, asOf)))
+    readEntriesWith(spark, base, table, headers, entries, fileSel)
+  }
+
+  /** [[readEntries]] over an already-loaded version's headers — the
+    * entries and the schema/dvkey they are read under come from ONE
+    * manifest, so no commit landing between two resolutions can pair
+    * one version's files with another's schema.
+    */
+  private def readEntriesWith(spark: SparkSession, base: Path, table: String,
+      headers: Map[String, String], entries: Seq[Entry],
+      fileSel: Map[String, Seq[String]] = Map.empty): DataFrame = {
     val schema = headers.get("schema")
       .map(DataType.fromJson(_).asInstanceOf[StructType])
     // COLUMN MAPPING (renameColumn): files store renamed columns under
@@ -643,9 +656,14 @@ object ManifestVersioned {
     * `asOf` is None).
     */
   def read(spark: SparkSession, warehouseDir: String, table: String,
-      asOf: Option[Int] = None): DataFrame =
-    readEntries(spark, warehouseDir, table, asOf,
-      manifestEntries(spark, warehouseDir, table, asOf).values.toSeq)
+      asOf: Option[Int] = None): DataFrame = {
+    // the version resolves ONCE (one listing when `asOf` is None) and
+    // its manifest loads once: entries and schema are the same commit's
+    val base = root(warehouseDir, table)
+    val (headers, entries) = loadManifest(fsOf(spark, base),
+      manifestPath(base, resolve(spark, warehouseDir, table, asOf)))
+    readEntriesWith(spark, base, table, headers, entries.values.toSeq)
+  }
 
   /** MANIFEST-pruned read of specific partition values: only the named
     * partitions' dirs are listed or scanned — metadata-level pruning
@@ -1360,7 +1378,7 @@ object ManifestVersioned {
     val genSpecs = GenCols.parse(
       (try tableProperties(spark, warehouseDir, table)
        catch { case scala.util.control.NonFatal(_) =>
-         Map.empty[String, String] }) ++ properties)
+         Map.empty[String, String] }) -- dropProperties ++ properties)
     val df = applyGenerated(spark, df0, genSpecs)
     GenCols.validate(genSpecs, df.schema)
     // a rewrite that PROVIDES a generated column verifies it against
@@ -1738,6 +1756,15 @@ object ManifestVersioned {
     * (schema-only commits move no partition entry, so the `expect`
     * entry check alone cannot see them; found by the two-writer model
     * check racing RENAME COLUMN against MERGE).
+    *
+    * `dropIfEmpty`: partitions to drop exactly when the delta stages
+    * NOTHING for them — the caller's touched set, whose emptied members
+    * are then read off the stage's own entries instead of a separate
+    * pass over the delta. `genDerived`: every generated column the
+    * delta carries was derived in-engine from its source (or from
+    * stored rows that were), so the row-for-row transform verification
+    * — a full extra pass over the delta — is skipped; declared CHECKs
+    * still gate.
     */
   private def writeDeltaInternal(spark: SparkSession, warehouseDir: String,
       table: String, delta0: DataFrame, partCols: Seq[String],
@@ -1745,7 +1772,9 @@ object ManifestVersioned {
       expect: Option[Map[String, Option[Entry]]],
       extraProps: Map[String, String] = Map.empty,
       expectProps: Map[String, Option[String]] = Map.empty,
-      expectSchema: Option[StructType] = None): Int = {
+      expectSchema: Option[StructType] = None,
+      dropIfEmpty: Seq[Seq[String]] = Nil,
+      genDerived: Boolean = false): Int = {
     if (extraProps.nonEmpty) checkPropKeys(extraProps)
     val base = root(warehouseDir, table)
     val fs = fsOf(spark, base)
@@ -1798,7 +1827,7 @@ object ManifestVersioned {
     }.getOrElse(delta)
     // CHECK constraints gate here — before any staging bytes — so a
     // violating batch leaves no debris and no version
-    enforceChecks(spark, warehouseDir, table, staged)
+    enforceChecks(spark, warehouseDir, table, staged, verifyGen = !genDerived)
     // COLUMN MAPPING: staged files store renamed columns under their
     // stable PHYSICAL names (schema/checks above speak logical; the
     // partition/bloom/NDV columns are rename-guarded, so their names
@@ -1880,7 +1909,8 @@ object ManifestVersioned {
             k -> ((e.dir, if (ok) rel else ""))
         }.toMap
       }
-    val dropKeys = dropParts.map(keyOf(_)).toSet
+    val dropKeys = dropParts.map(keyOf(_)).toSet ++
+      dropIfEmpty.map(keyOf(_)).filterNot(entries.contains)
     commitMerged(spark, warehouseDir, table,
       baseMan => {
         val kept = baseMan -- dropKeys
@@ -2293,11 +2323,16 @@ object ManifestVersioned {
       note: String = "", helperCols: Seq[String] = Nil,
       expectSchema0: Option[StructType] = None)
       : (Seq[Seq[String]], Int) = {
+    val specs = generatedColumns(spark, warehouseDir, table, Some(baseV))
+    if (partitionCols.nonEmpty && partitionCols.forall(p =>
+        specs.exists(s => s.genCol == p && s.src == keyCol)))
+      return mergeKeyDerivedAt(spark, warehouseDir, table, baseV, change0,
+        keyCol, partitionCols, specs, order, isTombstone, sourceWins, note,
+        helperCols, expectSchema0)
     // the change side derives omitted generated columns BEFORE the
     // touched-partition probe — a CDC batch addressing a days(ts)
     // partitioned table never carries the day column itself
-    val change = applyGenerated(spark, change0,
-      generatedColumns(spark, warehouseDir, table, Some(baseV)))
+    val change = applyGenerated(spark, change0, specs)
     val target = read(spark, warehouseDir, table, Some(baseV))
     val baseEntries = manifestEntries(spark, warehouseDir, table, Some(baseV))
     val partTuple: DataFrame => DataFrame = df =>
@@ -2347,6 +2382,62 @@ object ManifestVersioned {
         dropParts = drops, note = note, expect = Some(expected),
         expectSchema = expectSchema0.orElse(
           manifestSchema(spark, warehouseDir, table, Some(baseV)))))
+  }
+
+  /** [[mergeVersionedAt]] on a KEY-DERIVED layout: every partition
+    * column is a declared transform of `keyCol` ([[GenCols]] — the
+    * warehouse adapter's `keybucket` shard is the nightly case), so all
+    * rows of a key live in the one partition its own value names, and
+    * the touched set is exactly the partitions of the change rows. No
+    * zone/bloom locate and no semi-join against stored rows: the change
+    * materializes once (the touched-set collect fills the cache, the
+    * merge reads it back), the merge is one shuffle by partition
+    * ([[graft.core.Merge.mergeClustered]]) whose tasks each write whole
+    * partitions, and the partitions emptied by tombstones are the
+    * touched ones the stage produced no entry for. Merge semantics and
+    * the OCC expectation over the touched set are the general path's.
+    */
+  private def mergeKeyDerivedAt(spark: SparkSession, warehouseDir: String,
+      table: String, baseV: Int, change0: DataFrame, keyCol: String,
+      partitionCols: Seq[String], specs: Seq[GenCols.GenSpec],
+      order: Seq[Column], isTombstone: Column, sourceWins: Boolean,
+      note: String, helperCols: Seq[String],
+      expectSchema0: Option[StructType]): (Seq[Seq[String]], Int) = {
+    val change = applyGenerated(spark, change0, specs)
+    // a caller's own cache of the same plan is left to the caller
+    val owned =
+      change.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    change.persist()
+    try {
+      val touched = change
+        .select(partitionCols.map(c => col(c).cast("string").as(c)): _*)
+        .distinct().collect()
+        .map(r => partitionCols.indices.map(r.getString): Seq[String]).toSeq
+      if (touched.isEmpty) return (Nil, baseV)
+      val baseEntries = manifestEntries(spark, warehouseDir, table,
+        Some(baseV))
+      val existing = touched.filter(v => baseEntries.contains(keyOf(v)))
+      val slice =
+        if (existing.isEmpty) read(spark, warehouseDir, table, Some(baseV))
+          .limit(0)
+        else readPartitionsMulti(spark, warehouseDir, table, existing,
+          Some(baseV))
+      val mergedAll = graft.core.Merge.mergeClustered(slice, change, keyCol,
+        partitionCols, order, isTombstone, sourceWins)
+      val merged =
+        if (helperCols.isEmpty) mergedAll else mergedAll.drop(helperCols: _*)
+      val expected = touched
+        .map(v => keyOf(v) -> baseEntries.get(keyOf(v))).toMap
+      (touched,
+        writeDeltaInternal(spark, warehouseDir, table, merged, partitionCols,
+          dropParts = Nil, note = note, expect = Some(expected),
+          expectSchema = expectSchema0.orElse(
+            manifestSchema(spark, warehouseDir, table, Some(baseV))),
+          dropIfEmpty = touched,
+          // a change that carried a generated column itself is verified
+          // with the merged rows; derived ones are right by construction
+          genDerived = !specs.exists(s => change0.columns.contains(s.genCol))))
+    } finally if (owned) change.unpersist()
   }
 
   /** The distinct `keyCol` values of `keys` that are PRESENT in the

@@ -48,6 +48,13 @@ trait WarehouseAdapter {
   * is where a substrate opts OUT of it. Semantics must be
   * bit-identical to read → [[graft.core.Merge.merge]] → replace
   * (the pipeline's 3-night equivalence spec is the definition).
+  *
+  * What it saves depends on how the batch falls on the layout: the
+  * manifest substrate hashes keys into 8 buckets, and a night's batch
+  * scattered over the key space touches every one of the 8 — such a
+  * night still rewrites the whole table, only in one pass (the change
+  * read once, one shuffle, one file per bucket) instead of read, merge
+  * and replace. A batch clustered on few buckets rewrites only those.
   */
 trait MergeCapableWarehouse { self: WarehouseAdapter =>
   /** First-sight full load laid out so [[mergeChanges]] can colocate
@@ -189,7 +196,9 @@ object ParquetWarehouseAdapter extends WarehouseAdapter {
   * touched shard. Full loads restamp everything, so shard sprawl
   * resets every [[overwrite]]/[[replace]]; between full loads the
   * layer's OPTIMIZE/compaction folds sprawl if a caller lets appends
-  * accumulate.
+  * accumulate. A table first loaded by [[mergeBootstrap]] instead
+  * declares the shard as the generated column `keybucket(shards,
+  * key)`, and every verb derives it from the key (see there).
   *
   * Scale note: [[overwrite]] and [[replace]] are full-snapshot commits
   * (O(table)) — exactly the reference's WRITE_TRUNCATE contract
@@ -227,7 +236,7 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
     "(pmod by zero would stamp NULL shard buckets)")
   require(recoveryGraceMs >= 0L,
     s"recoveryGraceMs must be >= 0, got $recoveryGraceMs")
-  import org.apache.spark.sql.functions.{col, concat, lit, pmod, xxhash64}
+  import org.apache.spark.sql.functions.{concat, lit, pmod, xxhash64}
 
   private[io] val ShardCol = "_graft_shard"
 
@@ -237,10 +246,15 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
       case _ => true
     }).map(f => org.apache.spark.sql.functions.col(f.name))
 
-  private def stamped(df: DataFrame): DataFrame = {
+  private def unstamped(df: DataFrame): DataFrame = {
     require(!df.columns.contains(ShardCol),
       s"manifest warehouse adapter: the frame already carries the " +
         s"reserved shard column $ShardCol")
+    df
+  }
+
+  private def stamped(df0: DataFrame): DataFrame = {
+    val df = unstamped(df0)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val hs = hashableCols(df)
     val bucket =
@@ -260,12 +274,25 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
       table: String): Boolean =
     ManifestVersioned.currentVersion(spark, warehouseDir, table).isDefined
 
+  /** The head version resolves once (one listing) and the read is
+    * pinned to it, so a commit landing mid-call cannot tear the read.
+    */
   def read(spark: SparkSession, warehouseDir: String, table: String)
       : DataFrame = {
-    require(exists(spark, warehouseDir, table),
+    val head = ManifestVersioned.currentVersion(spark, warehouseDir, table)
+    require(head.isDefined,
       s"manifest warehouse table $table does not exist under $warehouseDir")
-    ManifestVersioned.read(spark, warehouseDir, table).drop(ShardCol)
+    ManifestVersioned.read(spark, warehouseDir, table, head).drop(ShardCol)
   }
+
+  /** The table's declared shard transform ([[mergeBootstrap]]'s
+    * `keybucket`), None for batch-tagged tables, tables bootstrapped
+    * before the declaration existed, and absent tables.
+    */
+  private def shardSpec(spark: SparkSession, warehouseDir: String,
+      table: String): Option[GenCols.GenSpec] =
+    ManifestVersioned.generatedColumns(spark, warehouseDir, table)
+      .find(_.genCol == ShardCol)
 
   private def keyProps(df: DataFrame): Map[String, String] =
     mergeKey.filter(df.columns.contains)
@@ -280,10 +307,13 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
 
   /** O(batch): the fresh batch tag means every staged partition is NEW
     * — [[ManifestVersioned.appendRows]]'s touched-partition slice is
-    * empty, so nothing existing is read or rewritten. Schema is gated
-    * exactly (both directions, positional) like the CSV substrate: the
-    * manifest layer's own additive evolution is a deliberate act on
-    * the engine surface, never a silent boundary append.
+    * empty, so nothing existing is read or rewritten. On a table that
+    * declares the key shard ([[mergeBootstrap]]) the shard derives from
+    * the key instead, and the append folds into the touched buckets.
+    * Schema is gated exactly (both directions, positional) like the CSV
+    * substrate: the manifest layer's own additive evolution is a
+    * deliberate act on the engine surface, never a silent boundary
+    * append.
     */
   def append(df: DataFrame, warehouseDir: String, table: String): Unit = {
     val spark = df.sparkSession
@@ -296,7 +326,10 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
       s"manifest warehouse append to $table: frame schema " +
         s"(${df.schema.simpleString}) does not match the recorded " +
         s"schema (${rec.simpleString})")
-    ManifestVersioned.appendRows(spark, warehouseDir, table, stamped(df),
+    val rows =
+      if (shardSpec(spark, warehouseDir, table).isDefined) unstamped(df)
+      else stamped(df)
+    ManifestVersioned.appendRows(spark, warehouseDir, table, rows,
       note = "warehouse append")
   }
 
@@ -311,44 +344,69 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
     * a stale key pair would make registerAll() hand out a table whose
     * SQL DML resolves a nonexistent column, the deferred error this
     * adapter exists to prevent.
+    *
+    * On a table that declares the key shard ([[mergeBootstrap]]) the
+    * rewrite keeps the key-bucketed layout: the shard derives from the
+    * key, so a later [[mergeChanges]] still takes the one-pass path. A
+    * frame that dropped the key column drops the declaration in the
+    * same commit and takes the batch-tagged stamp.
     */
   def replace(spark: SparkSession, warehouseDir: String, table: String,
-      df: DataFrame): Unit =
+      df: DataFrame): Unit = {
+    val decl = shardSpec(spark, warehouseDir, table)
+    val keyed = decl.exists(s => df.columns.contains(s.src))
     ManifestVersioned.writeFullMulti(spark, warehouseDir, table,
-      stamped(df), Seq(ShardCol), properties = keyProps(df),
+      if (keyed) unstamped(df) else stamped(df), Seq(ShardCol),
+      properties = keyProps(df),
       dropProperties =
         mergeKey.filterNot(df.columns.contains).map(_ => "graft.mergeKey")
-          .toSeq)
+          .toSeq ++
+        decl.filterNot(_ => keyed).map(_ => GenCols.Prefix + ShardCol))
+  }
 
   /** First-sight full load under the KEY-BUCKETED layout the nightly
-    * merge path needs ([[mergeChanges]]): the shard stamp is the
-    * DETERMINISTIC `k<xxhash64(keyCol) % shards>` — no per-batch tag —
-    * so every row of a key lives in exactly one generation dir across
-    * all nights, and a bloom policy over `keyCol` is recorded so the
-    * merge's key-locate probe prunes straight to the buckets actually
-    * holding changed keys. Contrast [[replace]]/[[append]]'s
-    * batch-tagged stamp, which optimizes append-only O(batch) writes
-    * instead; the two layouts share the `.mv` table format, `read`
-    * and `exists` verbs, and MVCC history.
+    * merge path needs ([[mergeChanges]]): the shard column is DECLARED
+    * as the generated column `keybucket(shards, keyCol)` ([[GenCols]]),
+    * whose value is the deterministic `k<pmod(xxhash64(keyCol),
+    * shards)>` — no per-batch tag — so every row of a key lives in
+    * exactly one generation dir across all nights. The declaration is a
+    * durable table property recorded in this same commit: every later
+    * write path (the adapter verbs, SQL INSERT, `appendRows`,
+    * `writeDelta`) derives or verifies the shard from the key, and the
+    * keyed merge reads a night's touched buckets straight off the
+    * change rows. A bloom policy over `keyCol` serves point lookups.
+    * Contrast [[replace]]/[[append]]'s batch-tagged stamp on undeclared
+    * tables, which optimizes append-only O(batch) writes instead; the
+    * two layouts share the `.mv` table format, `read` and `exists`
+    * verbs, and MVCC history.
     */
   def mergeBootstrap(df: DataFrame, warehouseDir: String, table: String,
       keyCol: String): Unit = {
     require(df.columns.contains(keyCol),
       s"mergeBootstrap($table): frame has no key column $keyCol")
     ManifestVersioned.writeFullMulti(df.sparkSession, warehouseDir, table,
-      keyStamped(df, keyCol), Seq(ShardCol), bloomCols = Seq(keyCol),
-      properties = Map("graft.mergeKey" -> keyCol))
+      unstamped(df), Seq(ShardCol), bloomCols = Seq(keyCol),
+      properties = Map("graft.mergeKey" -> keyCol,
+        GenCols.Prefix + ShardCol -> s"keybucket($shards, $keyCol)"))
   }
 
   /** The O(changed-partitions) nightly verb: route a change batch
     * (upserts + tombstones) through the engine's versioned keyed merge
     * ([[ManifestVersioned.mergeVersionedMulti]]) instead of the
-    * read-merge-replace full rewrite. Change rows are stamped with the
-    * same deterministic key bucket [[mergeBootstrap]] laid the table
-    * out under, so the commit stages ONLY the buckets holding changed
+    * read-merge-replace full rewrite. On a table that declares the key
+    * shard ([[mergeBootstrap]]) the change rows derive their bucket
+    * from the declaration, and the merge takes its one-pass key-derived
+    * path: the touched buckets are the change rows' own, one shuffle
+    * merges them, and each touched bucket is rewritten as one file.
+    * Tables bootstrapped before the declaration existed get the same
+    * bucket stamped here and take the general locate-then-merge path.
+    * Either way the commit stages ONLY the buckets holding changed
     * keys — untouched generation dirs are not read, not rewritten,
     * and stay byte-identical across the commit (the property the
-    * 3-night pipeline spec pins). Merge semantics are exactly the
+    * 3-night pipeline spec pins). A batch scattered over the key space
+    * touches every bucket, though: a 1 % night over 8 buckets rewrites
+    * all 8, so such a night rewrites the table — in one pass, not the
+    * full read-merge-replace. Merge semantics are exactly the
     * overwrite path's ([[graft.core.Merge.merge]] on the partition
     * slice): version-ordered latest-wins with null-aware tombstone
     * deletes — so the final table is bit-identical to what
@@ -366,22 +424,22 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
         "first sight goes through mergeBootstrap")
     require(change.columns.contains(keyCol),
       s"mergeChanges($table): change frame has no key column $keyCol")
+    val rows =
+      if (shardSpec(spark, warehouseDir, table).isDefined) unstamped(change)
+      else keyStamped(change, keyCol)
     ManifestVersioned.mergeVersionedMulti(spark, warehouseDir, table,
-      keyStamped(change, keyCol), keyCol, Seq(ShardCol), order,
+      rows, keyCol, Seq(ShardCol), order,
       isTombstone, note = "pipeline incremental merge")
   }
 
-  /** The deterministic key-bucket stamp shared by [[mergeBootstrap]]
-    * and [[mergeChanges]] — a pure function of the key value, so the
-    * change side colocates with the table side by construction.
+  /** The key-bucket stamp of a table bootstrapped without the shard
+    * declaration — the same value `keybucket(shards, keyCol)` derives,
+    * so the change side colocates with the table side by construction.
     */
-  private def keyStamped(df: DataFrame, keyCol: String): DataFrame = {
-    require(!df.columns.contains(ShardCol),
-      s"manifest warehouse adapter: the frame already carries the " +
-        s"reserved shard column $ShardCol")
-    df.withColumn(ShardCol, concat(lit("k"),
-      pmod(xxhash64(col(keyCol)), lit(shards.toLong)).cast("string")))
-  }
+  private def keyStamped(df: DataFrame, keyCol: String): DataFrame =
+    unstamped(df).withColumn(ShardCol, GenCols.mkColumn(
+      GenCols.GenSpec(ShardCol, "keybucket", Some(shards.toLong), keyCol),
+      df.schema(keyCol).dataType))
 
   /** Heal crash debris across every manifest table under the root,
     * retaining ALL committed history: the vacuum planner with

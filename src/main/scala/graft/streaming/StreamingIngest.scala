@@ -245,10 +245,10 @@ object StreamingIngest {
     * the LOG-STRUCTURED LM count state
     * ([[graft.ext.LangModel.writeLmDeltaState]]): the batch's
     * unigram/bigram count deltas are appended under the batch-id tag, so
-    * foreachBatch's at-least-once replay hits the applied-ledger no-op
-    * instead of double-counting — the count-state analogue of
-    * [[indexTextBatch]]'s anti-join guard, at one-ledger-row cost per
-    * batch. Bootstrap: `writeLmDeltaState` once (any seed batch, e.g.
+    * foreachBatch's at-least-once replay skips every phase the state's
+    * phase ledger already marks instead of double-counting — the
+    * count-state analogue of [[indexTextBatch]]'s anti-join guard, at
+    * one marker file per phase. Bootstrap: `writeLmDeltaState` once (any seed batch, e.g.
     * empty) before the first stream start; compact periodically with
     * [[graft.ext.LangModel.compactLmDeltaState]].
     */
@@ -256,7 +256,7 @@ object StreamingIngest {
       textCol: String, idCol: String, numBuckets: Int, batchId: Long): Unit = {
     graft.ext.LangModel.appendLmDelta(batch.sparkSession, name, batch,
       col(textCol), idCol, numBuckets, s"stream_$batchId")
-    Seq("uni", "bi", "applied").foreach(t =>
+    Seq("uni", "bi").foreach(t =>
       spark.catalog.refreshTable(s"${name}_$t"))
   }
 

@@ -115,6 +115,45 @@ class MergeSpec extends AnyFunSuite {
     assert(first.filter(col("systemid") === "B").select("payload").as[Int].head() === 30)
   }
 
+  test("mergeClustered equals merge and mergeSourceWins on a layout " +
+      "derived from the key — NULL keys, tombstones, ties, an older " +
+      "change row — in one shuffle") {
+    val bucket = pmod(xxhash64(col("k")), lit(3L))
+    val target = Seq[(String, String, String, Int)](
+      ("A", "2024-01-01", "live", 1), ("B", "2024-01-01", "live", 2),
+      ("C", "2024-01-03", "live", 3), (null, "2024-01-01", "live", 4),
+      ("D", "2024-01-01", "live", 5))
+      .toDF("k", "m", "status", "payload").withColumn("b", bucket)
+    val change = Seq[(String, String, String, Int)](
+      ("A", "2024-02-01", "live", 10), ("B", null, "dead", 0),
+      ("E", "2024-02-01", "live", 11), (null, "2024-02-01", "live", 12),
+      ("D", "2024-02-01", "live", 13), ("D", "2024-02-01", "live", 14),
+      ("C", "2023-12-01", "live", 15))
+      .toDF("k", "m", "status", "payload").withColumn("b", bucket)
+    val order = Seq(col("m").desc_nulls_last, col("payload").desc)
+    val tomb = col("status") === "dead"
+    def same(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.columns.toSeq === b.columns.toSeq)
+      assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
+    }
+    for (sourceWins <- Seq(false, true)) {
+      val out = Merge.mergeClustered(target, change, "k", Seq("b"), order,
+        tomb, sourceWins)
+      val shuffles = out.queryExecution.executedPlan.toString
+        .linesIterator.count(_.contains("Exchange hashpartitioning"))
+      assert(shuffles === 1, s"sourceWins=$sourceWins: $shuffles shuffles")
+      same(out,
+        if (sourceWins) Merge.mergeSourceWins(target, change, "k", order, tomb)
+        else Merge.merge(target, change, "k", order, tomb))
+    }
+    // version order keeps the newer target C; source-wins takes the change
+    val payloadOfC = (sw: Boolean) => Merge.mergeClustered(target, change,
+      "k", Seq("b"), order, tomb, sw).filter(col("k") === "C")
+      .select("payload").as[Int].collect().toSeq
+    assert(payloadOfC(false) === Seq(3) && payloadOfC(true) === Seq(15))
+  }
+
   test("scdHistory stamps contiguous validity ranges with one open current version") {
     val df = Seq(
       ("A", 1L, 10), ("A", 3L, 11), ("A", 3L, 12), ("A", 7L, 13), // tie at 3

@@ -422,6 +422,230 @@ class PipelineSpec extends AnyFunSuite {
       === Seq(0L))
   }
 
+  // ── key-shard declaration: the one-pass keyed merge ──────────────
+
+  private val ledgerFolder = "Customer-Ledger"
+  private val ledgerTable = "customerledger"
+
+  /** Night `n` (1-3) of the Customer-Ledger fixture the MergeMode spec
+    * above runs: a full load, an update + insert with schema drift, a
+    * tombstone + tie update.
+    */
+  private def writeLedgerNight(root: String, n: Int): Unit = {
+    val t1 = 1700000000000L
+    val header = "systemid,systemcreatedat-2000000001," +
+      "systemcreatedby-2000000002,systemmodifiedat-2000000003," +
+      "systemmodifiedby-2000000004,$company,No-1,Amount-3"
+    val path = s"$root/src/$ledgerFolder/f$n.csv"
+    n match {
+      case 1 => write(path, t1, header,
+        s"A,2024-01-01 08:00:00,{u1},2024-01-01 08:00:00,{u1},CRONUS,10000,100.5",
+        s"A,2024-01-01 08:00:00,{u1},2024-01-05 09:30:00,{u1},CRONUS,10001,150.5",
+        s"B,2024-01-02 08:00:00,{u1},2024-01-02 08:00:00,{u1},CRONUS,10002,200.0",
+        s"C,2024-01-03 08:00:00,{u1},2024-01-03 08:00:00,{u1},CRONUS,10003,300.0",
+        s"D,2024-01-04 08:00:00,{u1},2024-01-04 08:00:00,{u1},CRONUS,10004,400.0")
+      case 2 => write(path, t1 + 60000, header + ",NewCol-9",
+        s"B,2024-01-02 08:00:00,{u1},2024-02-01 08:00:00,{u2},CRONUS,10002,999.0,x",
+        s"E,2024-02-01 08:00:00,{u1},2024-02-01 08:00:00,{u1},CRONUS,10005,500.0,y")
+      case 3 => write(path, t1 + 120000, header + ",NewCol-9",
+        s"C,,$zero,,$zero,CRONUS,,,",
+        s"D,2024-01-04 08:00:00,{u1},2024-03-01 08:00:00,{u3},CRONUS,10004,1.0,t1",
+        s"D,2024-01-04 08:00:00,{u1},2024-03-01 08:00:00,{u3},CRONUS,10004,2.0,t2")
+    }
+  }
+
+  private def manifestCfg(root: String, tag: String,
+      mode: Pipeline.LoadMode) = Pipeline.Config(
+    sourceRoot = s"$root/src",
+    warehouseDir = s"$root/wh-$tag",
+    statePath = s"$root/state-$tag/latest.csv",
+    adapter = new graft.io.ManifestWarehouseAdapter(shards = 8),
+    mode = mode)
+
+  /** The table as sorted schema + sorted rendered rows. */
+  private def canonOf(cfg: Pipeline.Config)
+      : (Seq[(String, String)], Seq[String]) = {
+    val df = cfg.adapter.read(spark, cfg.warehouseDir, ledgerTable)
+    val cols = df.columns.sorted.toSeq
+    (df.schema.fields.map(f => (f.name, f.dataType.simpleString))
+      .sortBy(_._1).toSeq,
+      df.select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+  }
+
+  private def rows(cfg: Pipeline.Config): Seq[Long] =
+    Pipeline.run(spark, cfg, clock = clock).tables.map(_.rows.get)
+
+  /** Runs `body` and returns, per Spark job it started, the call-site
+    * long form of the job's SQL execution (else of its stages) — the
+    * frames that say which engine call issued the job.
+    */
+  private def jobSites(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execSites.put(s.executionId, s.details)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val exec = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id.toLong)))
+        sites.add(exec.getOrElse(j.stageInfos.map(_.details).mkString("\n")))
+      }
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
+
+  private def fromLocate(site: String): Boolean =
+    site.contains("locateCandidates(") || site.contains("BloomSidecar$.prune(")
+
+  test("a MergeMode night on a key-shard-declared table is one pass: no " +
+      "locate or bloom-probe job, a bounded job count, and one data " +
+      "file per touched bucket") {
+    val root = Files.createTempDirectory("graft-onepass").toString
+    val mg = manifestCfg(root, "mg", Pipeline.MergeMode)
+    writeLedgerNight(root, 1)
+    assert(rows(mg) === Seq(4L))
+    assert(graft.io.ManifestVersioned.generatedColumns(spark,
+        mg.warehouseDir, ledgerTable).map(s => (s.genCol, s.fn, s.src)) ===
+      Seq(("_graft_shard", "keybucket", "systemid")),
+      "the merge bootstrap declares its shard column")
+    val before = graft.io.ManifestVersioned.manifestEntries(spark,
+      mg.warehouseDir, ledgerTable)
+    writeLedgerNight(root, 2)
+    val sites = jobSites { assert(rows(mg) === Seq(5L)) }
+    assert(sites.exists(_.contains("mergeVersionedAt(")),
+      s"none of ${sites.size} job call sites carries the merge's own " +
+        "frames, so the pin below could not bite")
+    assert(!sites.exists(fromLocate),
+      "the one-pass merge ran a locate/bloom-probe job")
+    // the whole night measured 15 jobs: watermark load 1, CSV read 2,
+    // the touched-bucket collect that fills the change cache 3, the
+    // merge's stage write 2, the key bloom stage 4, the post-load count
+    // 2, watermark save 1 (the locate path ran 27)
+    info(s"${sites.size} Spark jobs in the night")
+    assert(sites.size <= 15, s"${sites.size} jobs")
+    val after = graft.io.ManifestVersioned.manifestEntries(spark,
+      mg.warehouseDir, ledgerTable)
+    val rewritten = after.filter { case (k, e) =>
+      before.get(k).forall(_.dir != e.dir) }
+    assert(rewritten.nonEmpty)
+    rewritten.values.foreach { e =>
+      val files = new File(s"${mg.warehouseDir}/$ledgerTable.mv/${e.dir}")
+        .listFiles().map(_.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      assert(files.length === 1,
+        s"bucket ${e.dir} holds ${files.mkString(", ")}")
+    }
+  }
+
+  test("MergeMode bootstrap, an OverwriteMode night, then a MergeMode " +
+      "night equal OverwriteMode; the full rewrite keeps the key-bucketed " +
+      "layout and its declaration") {
+    val root = Files.createTempDirectory("graft-mixmode").toString
+    val ow = manifestCfg(root, "ow", Pipeline.OverwriteMode)
+    val modes = Seq(Pipeline.MergeMode, Pipeline.OverwriteMode,
+      Pipeline.MergeMode)
+    (1 to 3).foreach { night =>
+      writeLedgerNight(root, night)
+      val mx = manifestCfg(root, "mx", modes(night - 1))
+      val sites = jobSites { assert(rows(mx) === rows(ow)) }
+      assert(canonOf(mx) === canonOf(ow), s"night $night diverged")
+      assert(graft.io.ManifestVersioned.generatedColumns(spark,
+        mx.warehouseDir, ledgerTable).map(_.genCol) === Seq("_graft_shard"))
+      val buckets = graft.io.ManifestVersioned.manifestEntries(spark,
+        mx.warehouseDir, ledgerTable).keys
+        .map(graft.io.ManifestVersioned.valueOf)
+      assert(buckets.nonEmpty && buckets.forall(_.matches("k[0-7]")),
+        s"night $night left non-key buckets: $buckets")
+      if (night == 3) assert(!sites.exists(fromLocate),
+        "the merge after a full rewrite fell back to the locate path")
+    }
+  }
+
+  test("undeclared tables take the general merge path and still equal " +
+      "OverwriteMode: an OverwriteMode bootstrap, and a MergeMode " +
+      "bootstrap without the shard declaration") {
+    val root = Files.createTempDirectory("graft-undeclared").toString
+    val ow = manifestCfg(root, "ow", Pipeline.OverwriteMode)
+    val fromOverwrite = Seq(Pipeline.OverwriteMode, Pipeline.MergeMode,
+      Pipeline.MergeMode).map(manifestCfg(root, "fo", _))
+    val legacy = manifestCfg(root, "lg", Pipeline.MergeMode)
+    (1 to 3).foreach { night =>
+      writeLedgerNight(root, night)
+      val expect = rows(ow)
+      val sites = jobSites {
+        assert(rows(fromOverwrite(night - 1)) === expect)
+        assert(rows(legacy) === expect)
+      }
+      if (night == 1)
+        // the layout a merge bootstrap wrote before the declaration
+        // existed: same key buckets, no graft.generated property
+        graft.io.ManifestVersioned.unsetTableProperties(spark,
+          legacy.warehouseDir, ledgerTable,
+          Seq(graft.io.GenCols.Prefix + "_graft_shard"))
+      else assert(sites.count(fromLocate) >= 2,
+        s"night $night: both undeclared merges must locate")
+      Seq(fromOverwrite(night - 1), legacy).foreach { cfg =>
+        assert(graft.io.ManifestVersioned.generatedColumns(spark,
+          cfg.warehouseDir, ledgerTable).isEmpty)
+        assert(canonOf(cfg) === canonOf(ow),
+          s"night $night: ${cfg.warehouseDir} diverged")
+      }
+    }
+  }
+
+  test("SQL INSERT into a key-shard-declared table verifies the shard: " +
+      "a wrong value is rejected, the derived one lands") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-shardins").toString
+    val adapter = new graft.io.ManifestWarehouseAdapter(shards = 8)
+    adapter.mergeBootstrap(Seq(("A", 1.0), ("B", 2.0))
+      .toDF("systemid", "amount"), wh, "shardins", "systemid")
+    graft.plans.GraftSqlTables.register(spark, wh, "shardins",
+      keyCol = Some("systemid"))
+    val spec = graft.io.ManifestVersioned
+      .generatedColumns(spark, wh, "shardins").head
+    val right = graft.io.GenCols.deriveLit(spec, "C").get.toString
+    val wrong = if (right == "k0") "k1" else "k0"
+    val v0 = graft.io.ManifestVersioned.currentVersion(spark, wh, "shardins")
+    Seq(("C", 3.0, wrong)).toDF("systemid", "amount", "_graft_shard")
+      .createOrReplaceTempView("shardins_src")
+    // a generated column is hidden from positional INSERT; naming it in
+    // the column list provides it, and the write gate verifies it
+    val e = intercept[Exception] {
+      spark.sql("INSERT INTO shardins (systemid, amount, _graft_shard) " +
+        "SELECT * FROM shardins_src")
+    }
+    assert(e.getMessage.contains("_graft_shard"), e.getMessage)
+    assert(graft.io.ManifestVersioned.currentVersion(spark, wh,
+      "shardins") === v0, "a rejected insert commits nothing")
+    spark.sql("INSERT INTO shardins VALUES ('C', 3.0)")
+    assert(adapter.read(spark, wh, "shardins").count() === 3)
+    assert(graft.io.ManifestVersioned.manifestEntries(spark, wh, "shardins")
+      .contains(graft.io.ManifestVersioned.keyOf(right)))
+    graft.plans.GraftSqlTables.unregister(spark, "shardins")
+    // a full rewrite that drops the key drops the declaration with it
+    adapter.replace(spark, wh, "shardins",
+      adapter.read(spark, wh, "shardins").drop("systemid"))
+    assert(graft.io.ManifestVersioned.generatedColumns(spark, wh,
+      "shardins").isEmpty)
+    assert(adapter.read(spark, wh, "shardins").count() === 3)
+  }
+
   test("MergeMode rejects substrates without the keyed-merge verb") {
     val e = intercept[IllegalArgumentException] {
       Pipeline.Config(

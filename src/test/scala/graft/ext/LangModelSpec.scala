@@ -82,4 +82,33 @@ class LangModelSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again === got)
   }
+
+  test("delta state: a batch that died between its unigram and bigram " +
+      "appends replays without double-counting its unigrams") {
+    val wh = Files.createTempDirectory("graft_lmcrash").toString
+    val b1 = train.filter(col("doc_id") === 0)
+    val b2 = train.filter(col("doc_id") =!= 0)
+    LangModel.writeLmDeltaState(b1, col("text"), "doc_id", wh, "lmc_spec",
+      4, "b1")
+    // the crash window: b2's unigram delta lands, then the bigram phase
+    // dies (here on a missing id column) before the batch completes
+    intercept[org.apache.spark.sql.AnalysisException] {
+      LangModel.appendLmDelta(spark, "lmc_spec", b2, col("text"),
+        "no_such_id", 4, "b2")
+    }
+    // the at-least-once replay of the same batch
+    LangModel.appendLmDelta(spark, "lmc_spec", b2, col("text"), "doc_id", 4,
+      "b2")
+    def summed(t: String, keys: Seq[String], c: String) =
+      spark.table(t).groupBy(keys.map(col): _*).agg(sum(c).cast("long"))
+        .collect().map(r => r.toSeq.init -> r.getLong(keys.size)).toMap
+    def once(df: org.apache.spark.sql.DataFrame, keys: Seq[String]) =
+      df.collect().map(r => r.toSeq.init -> r.getLong(keys.size)).toMap
+    assert(summed("lmc_spec_uni", Seq("w"), "c1") ===
+      once(LangModel.unigramCounts(train, col("text")), Seq("w")),
+      "unigram counts must equal a single apply of each batch")
+    assert(summed("lmc_spec_bi", Seq("w1", "w2"), "c2") ===
+      once(LangModel.bigramCounts(train, col("text"), "doc_id"),
+        Seq("w1", "w2")))
+  }
 }

@@ -75,10 +75,17 @@ class FaultFs extends RawLocalFileSystem {
     FaultFs.gate("mkdirs", f)
     super.mkdirs(f, permission)
   }
+  // listings are not mutations (never gated); listings of a manifest
+  // table's root are counted — each one is a version resolution
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName.endsWith(".mv")) FaultFs.manifestListings.incrementAndGet()
+    super.listStatus(f)
+  }
 }
 
 object FaultFs {
   val ops = new AtomicLong(0L)
+  val manifestListings = new AtomicLong(0L)
   @volatile var budget: Long = Long.MaxValue
   @volatile var trace: Boolean = false
   def arm(b: Long): Unit = { ops.set(0L); budget = b }
@@ -266,5 +273,27 @@ class CrashPointSpec extends AnyFunSuite {
         finalOk = _ == (oldSet ++ batchSet))
       info(s"$name append: swept $pts crash points")
     }
+  }
+
+  test("a manifest read resolves its version once: one _manifest " +
+      "listing per adapter.read and per ManifestVersioned.read") {
+    faultReady
+    val w = "fault:/tmp/graft-crash/read-once"
+    new Path(w).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(w), true)
+    val a = new ManifestWarehouseAdapter(shards = 2)
+    a.overwrite(df(old3), w, "t")
+    a.append(df(batch2), w, "t")
+    def listings(body: => Unit): Long = {
+      FaultFs.manifestListings.set(0L)
+      body
+      FaultFs.manifestListings.get
+    }
+    var read: DataFrame = null
+    assert(listings { read = a.read(spark, w, "t") } === 1L)
+    assert(canon(read) === oldSet ++ batchSet)
+    assert(listings { ManifestVersioned.read(spark, w, "t") } === 1L)
+    assert(listings { ManifestVersioned.read(spark, w, "t", Some(1)) } === 0L,
+      "a pinned version needs no listing at all")
   }
 }

@@ -231,6 +231,46 @@ class GeneratedColsSpec extends AnyFunSuite {
     assert(kept3.size === 1, "13 and 21 share bucket 5")
   }
 
+  test("keybucket: the driver twin matches the row-level hash shard, " +
+      "string-key equality prunes to one bucket, IS NULL derives nothing") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val spec = GenCols.GenSpec("g", "keybucket", Some(8L), "x")
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(300),
+      Prop.forAll(Gen.oneOf(Gen.alphaNumStr, Gen.asciiStr,
+          Gen.const(""), Gen.const("{0f3c-\u00e9\u4e2d}"))) { x =>
+        val row = Seq(x).toDF("x")
+          .select(GenCols.mkColumn(spec, StringType)).head().getString(0)
+        GenCols.deriveLit(spec, x).contains(row)
+      })
+    assert(res.passed, res.status.toString)
+    // the value is the manifest adapter's historical key stamp, byte
+    // for byte, NULL keys included (xxhash64 skips NULL: the seed's bucket)
+    val keys = Seq("A", "B", null, "{00000000-0000-0000-0000-000000000000}")
+    val df = keys.toDF("x")
+    assert(df.select(GenCols.mkColumn(spec, StringType)).as[String]
+      .collect().toSeq === df.select(concat(lit("k"),
+        pmod(xxhash64(col("x")), lit(8L)).cast("string"))).as[String]
+      .collect().toSeq)
+    val w = wh()
+    ManifestVersioned.writeFullMulti(spark, w, "t",
+      (0 until 200).map(i => (s"id$i", i.toLong)).toDF("id", "v"),
+      Seq("p_k"),
+      properties = Map("graft.generated.p_k" -> "keybucket(8, id)"))
+    assert(ManifestVersioned.manifestEntries(spark, w, "t").size === 8)
+    assert(ManifestVersioned.readWhereFiles(spark, w, "t",
+      Seq(ZoneEq("id", "id13"))).size === 1)
+    assert(ManifestVersioned.readFiltered(spark, w, "t",
+      col("id") === "id13").count() === 1)
+    assert(GenCols.derivedPreds(Seq(spec.copy(genCol = "p_k", src = "id")),
+      Some(StructType(Seq(StructField("id", StringType)))),
+      Seq(ZoneIsNull("id"), ZoneNotNull("id")), deriveTz = true).isEmpty)
+    // a non-string key hashes by its type: no literal derivation
+    assert(GenCols.derivedPreds(Seq(spec.copy(genCol = "p_k", src = "id")),
+      Some(StructType(Seq(StructField("id", LongType)))),
+      Seq(ZoneEq("id", Long.box(3L))), deriveTz = true).isEmpty)
+  }
+
   test("months and trunc transforms derive range pruning; Gt/Lt " +
       "collapse to the inclusive generated bound") {
     val w = wh()
