@@ -442,9 +442,9 @@ object ManifestVersioned {
     * NULL, which passes, exactly as the written files will read back.
     */
   private def enforceChecks(spark: SparkSession, warehouseDir: String,
-      table: String, delta: DataFrame, verifyGen: Boolean = true): Unit = {
+      table: String, delta: DataFrame, genDerived: Boolean = false): Unit = {
     val carried =
-      if (!verifyGen) Nil
+      if (genDerived) Nil
       else generatedColumns(spark, warehouseDir, table)
         .filter(s => delta.columns.contains(s.genCol))
     val declared = checks(spark, warehouseDir, table)
@@ -1827,7 +1827,7 @@ object ManifestVersioned {
     }.getOrElse(delta)
     // CHECK constraints gate here — before any staging bytes — so a
     // violating batch leaves no debris and no version
-    enforceChecks(spark, warehouseDir, table, staged, verifyGen = !genDerived)
+    enforceChecks(spark, warehouseDir, table, staged, genDerived)
     // COLUMN MAPPING: staged files store renamed columns under their
     // stable PHYSICAL names (schema/checks above speak logical; the
     // partition/bloom/NDV columns are rename-guarded, so their names
