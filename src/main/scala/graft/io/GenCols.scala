@@ -17,6 +17,7 @@ import org.apache.spark.sql.types._
   *   graft.generated.p_bkt  = bucket(16, id)     -- pmod(id, 16)
   *   graft.generated.p_rng  = trunc(1000, id)    -- id div 1000
   *   graft.generated.p_key  = keybucket(8, id)   -- 'k' || pmod(xxhash64(id), 8)
+  *                                               -- (integral ids hashed as long)
   * }}}
   *
   * and the engine takes over both ends of the contract:
@@ -65,6 +66,14 @@ import org.apache.spark.sql.types._
   * this way): the bucket is a pure function of the key, so a change
   * batch's touched buckets are exactly the buckets of its own rows —
   * the keyed merge needs no locate probe against the stored table.
+  * That holds only if a key hashes the same at every type a batch may
+  * carry it: integral keys hash as `long` (so the byte → short → int →
+  * long widening chain keeps every bucket), and the write paths derive
+  * the column from the source conformed to the table's recorded type
+  * (an `int` batch into a `string` key column hashes `"5"`, as stored).
+  * A widening that would move a key's hash (integral → double or
+  * decimal, decimal growth) is rejected on a keybucket source
+  * ([[hashStable]]).
   */
 object GenCols {
 
@@ -157,13 +166,17 @@ object GenCols {
   }
 
   /** The transform as a Column over the source column — what the write
-    * path derives/verifies with. Temporal functions evaluate under the
-    * session timezone; [[requireUtcIfNeeded]] gates instant-typed
-    * sources first so the stored values always match the UTC-fixed
-    * definition.
+    * path derives/verifies with, over the source column or over `c`,
+    * the source expression of type `srcType` (the write paths pass it
+    * conformed to the recorded type). Temporal functions evaluate
+    * under the session timezone; the write paths gate instant-typed
+    * sources on a UTC session first so the stored values always match
+    * the UTC-fixed definition.
     */
-  def mkColumn(s: GenSpec, srcType: DataType): Column = {
-    val c = col(s.src)
+  def mkColumn(s: GenSpec, srcType: DataType): Column =
+    mkColumn(s, srcType, col(s.src))
+
+  def mkColumn(s: GenSpec, srcType: DataType, c: Column): Column =
     s.fn match {
       case "days" => to_date(c)
       case "months" => (year(c) * 12 + month(c) - 1).cast(IntegerType)
@@ -188,13 +201,23 @@ object GenCols {
         // truncating division (toward zero, Spark's `div` = Java Long
         // division) — monotone for a positive divisor, and exactly
         // replayable driver-side as `x / n` (property-pinned)
-        expr(s"`${s.src}` div ${s.arg.get}")
+        call_function("div", c, lit(s.arg.get))
       case "keybucket" =>
-        concat(lit("k"), pmod(xxhash64(c), lit(s.arg.get)).cast("string"))
+        val h = if (integral(srcType)) c.cast(LongType) else c
+        concat(lit("k"), pmod(xxhash64(h), lit(s.arg.get)).cast("string"))
       case other => throw new IllegalArgumentException(
         s"unknown transform $other")
     }
-  }
+
+  /** Does the transform keep every stored value when its source column
+    * widens `from` → `to` in place? Value-based transforms do (every
+    * admitted widening is value-exact); `keybucket` hashes the physical
+    * value, which is stable only along the integral chain it hashes as
+    * `long` — any other widening would move stored keys' buckets.
+    */
+  def hashStable(s: GenSpec, from: DataType, to: DataType): Boolean =
+    s.fn != "keybucket" || (integral(from) && integral(to)) ||
+      DataType.equalsStructurally(from, to, ignoreNullability = true)
 
   /** Is the session timezone UTC? Instant-typed temporal transforms
     * are only admitted under it (see the object doc).
@@ -267,7 +290,7 @@ object GenCols {
     case "keybucket" => v match {
       // Spark's xxhash64 (seed 42) over the UTF-8 bytes; string literals
       // only — [[derivedPreds]] also requires a STRING source column,
-      // since the hash of a value differs across its types
+      // since a literal's own type need not be the column's
       case str: String =>
         val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
           .hash(org.apache.spark.unsafe.types.UTF8String.fromString(str),

@@ -1379,7 +1379,7 @@ object ManifestVersioned {
       (try tableProperties(spark, warehouseDir, table)
        catch { case scala.util.control.NonFatal(_) =>
          Map.empty[String, String] }) -- dropProperties ++ properties)
-    val df = applyGenerated(spark, df0, genSpecs)
+    val df = applyGenerated(spark, df0, genSpecs, recorded = None)
     GenCols.validate(genSpecs, df.schema)
     // a rewrite that PROVIDES a generated column verifies it against
     // the transform (derived ones are consistent by construction) — a
@@ -1454,20 +1454,36 @@ object ManifestVersioned {
     * pre-staging gate. Instant-typed calendar transforms require a UTC
     * session LOUDLY (a non-UTC writer would store values disagreeing
     * with the UTC-fixed definition and poison every future prune).
+    *
+    * `recorded`: the table's schema the batch lands in. The source is
+    * conformed to the type its rows will be STORED at before the
+    * transform runs — the recorded type, or the batch's own when it
+    * widens the recorded one ([[graft.core.Merge.alignedUnion]]'s rule)
+    * — so a batch whose key inferred narrower (`int` into `long`) or
+    * as another family (`int` into `string`) derives the bucket its
+    * stored rows carry. None (a full rewrite) = the batch's own types.
     */
   private def applyGenerated(spark: SparkSession, df: DataFrame,
-      specs: Seq[GenCols.GenSpec]): DataFrame =
+      specs: Seq[GenCols.GenSpec], recorded: Option[StructType])
+      : DataFrame =
     specs.foldLeft(df) { (d, s) =>
       val srcType = d.schema.fields.find(_.name == s.src).map(_.dataType)
       srcType match {
-        case Some(t) =>
+        case Some(own) =>
+          val t = recorded.flatMap(_.fields.find(_.name == s.src))
+            .map(_.dataType)
+            .filterNot(r => graft.core.SchemaGuard.widens(r, own))
+            .getOrElse(own)
           require(!GenCols.tzSensitive(s, t) || GenCols.utcSession(spark),
             s"generated column ${s.genCol} = ${s.fn}(${s.src}) is " +
               "defined in UTC but the session timezone is " +
               s"'${spark.sessionState.conf.sessionLocalTimeZone}' — set " +
               "spark.sql.session.timeZone=UTC (the engine-wide contract)")
           if (d.columns.contains(s.genCol)) d
-          else d.withColumn(s.genCol, GenCols.mkColumn(s, t))
+          else d.withColumn(s.genCol, GenCols.mkColumn(s, t,
+            if (DataType.equalsStructurally(own, t, ignoreNullability = true))
+              col(s.src)
+            else col(s.src).cast(t)))
         case None => d // source omitted too (additive evolution) — the
         // generated column reads NULL like any omitted column
       }
@@ -1643,8 +1659,9 @@ object ManifestVersioned {
     val partCols = partitionColumns(spark, warehouseDir, table,
       Some(baseV)).getOrElse(throw new IllegalStateException(
         s"$table records no #partcols header — replaceWhere needs it"))
+    val recorded = manifestSchema(spark, warehouseDir, table, Some(baseV))
     val batch = applyGenerated(spark, batch0,
-      generatedColumns(spark, warehouseDir, table, Some(baseV)))
+      generatedColumns(spark, warehouseDir, table, Some(baseV)), recorded)
     // every batch row must satisfy the predicate it replaces under
     require(batch.filter(!coalesce(cond, lit(false))).limit(1)
         .count() == 0L,
@@ -1685,20 +1702,18 @@ object ManifestVersioned {
       else readPartitionsMulti(spark, warehouseDir, table,
         candidates.map(partValuesOf), Some(baseV))
         .filter(!coalesce(cond, lit(false)))
+    // touched partitions the stage writes nothing for are the emptied
+    // ones, dropped in the same commit
     val merged = graft.core.Merge.alignedUnion(keep, batch)
-      .localCheckpoint(true)
-    val present = partTuple(merged).collect()
-      .map(r => partCols.indices.map(r.getString): Seq[String]).toSet
     val touched = (candidates.map(partValuesOf).toSet ++ batchParts).toSeq
-    val drops = touched.filterNot(present.contains)
     val expected = touched.map(v => keyOf(v) -> baseEntries.get(keyOf(v)))
       .toMap
     (touched,
       writeDeltaInternal(spark, warehouseDir, table, merged,
-        partCols, dropParts = drops, note = note,
+        partCols, dropParts = Nil, note = note,
         expect = Some(expected),
-        expectSchema = expectSchema0.orElse(
-          manifestSchema(spark, warehouseDir, table, Some(baseV)))))
+        expectSchema = expectSchema0.orElse(recorded),
+        dropIfEmpty = touched))
   }
 
   def writeDeltaMulti(spark: SparkSession, warehouseDir: String,
@@ -1780,11 +1795,6 @@ object ManifestVersioned {
     val fs = fsOf(spark, base)
     require(currentVersion(spark, warehouseDir, table).isDefined,
       s"writeDelta needs an existing version of $table — bootstrap with writeFull")
-    // declared generated columns the batch omits derive here (a caller
-    // partitioning by days(ts) never computes the day itself); carried
-    // ones verify in the enforceChecks gate below
-    val delta = applyGenerated(spark, delta0,
-      generatedColumns(spark, warehouseDir, table))
     // fail fast on a manifest-corrupting note BEFORE any staging bytes
     // (render would reject it too, but only after the write job ran)
     if (note.nonEmpty) checkHeaderText(Map("note" -> note))
@@ -1793,11 +1803,31 @@ object ManifestVersioned {
     // live head per attempt, so a concurrent widening is never dropped
     // and a concurrent retype conflict still aborts loudly mid-loop
     val headSchema = manifestSchema(spark, warehouseDir, table)
+    // declared generated columns the batch omits derive here (a caller
+    // partitioning by days(ts) never computes the day itself), from the
+    // source at the type it is stored at; carried ones verify in the
+    // enforceChecks gate below
+    val genSpecs = generatedColumns(spark, warehouseDir, table)
+    val delta = applyGenerated(spark, delta0, genSpecs, headSchema)
     // ... and faster still on column-mapping drift: a rename/drop that
     // committed since the caller's base snapshot makes the delta's
     // names stale — a CONFLICT (re-derive), not a schema error
     expectSchema.foreach(checkMappingDrift(table, _, headSchema))
-    headSchema.foreach(b => mergedSchema(b, delta.schema, table))
+    headSchema.foreach { b =>
+      val m = mergedSchema(b, delta.schema, table)
+      // a hash-derived generated column (keybucket) stored under the old
+      // type would no longer match the rows of the same keys at the new
+      // one — a keyed merge would miss them and keep both versions
+      val badGen = genSpecs.filter(g =>
+        b.fieldNames.contains(g.src) &&
+          !GenCols.hashStable(g, b(g.src).dataType, m(g.src).dataType))
+      require(badGen.isEmpty,
+        s"cannot widen ${badGen.map(_.src).distinct.mkString(",")} of " +
+          s"$table in place: ${badGen.map(g => s"${g.genCol} = " +
+            s"${g.fn}(${g.src})").mkString(", ")} hashes the stored " +
+          "type, so existing rows would keep buckets their keys no " +
+          "longer hash to — rewrite (writeFull) under the new type")
+    }
     // conform the delta UP to the merged recorded schema BEFORE staging:
     // staged parquet files — and, critically, the hash sidecars derived
     // from them (bloom/NDV, which hash the STAGED physical type) — must
@@ -2332,7 +2362,8 @@ object ManifestVersioned {
     // the change side derives omitted generated columns BEFORE the
     // touched-partition probe — a CDC batch addressing a days(ts)
     // partitioned table never carries the day column itself
-    val change = applyGenerated(spark, change0, specs)
+    val recorded = manifestSchema(spark, warehouseDir, table, Some(baseV))
+    val change = applyGenerated(spark, change0, specs, recorded)
     val target = read(spark, warehouseDir, table, Some(baseV))
     val baseEntries = manifestEntries(spark, warehouseDir, table, Some(baseV))
     val partTuple: DataFrame => DataFrame = df =>
@@ -2363,25 +2394,24 @@ object ManifestVersioned {
       if (existing.isEmpty) target.limit(0)
       else readPartitionsMulti(spark, warehouseDir, table, existing,
         Some(baseV))
-    // survivors of slice ∪ change — consumed twice (emptied-partition
-    // probe + the delta write), so materialize once
+    // survivors of slice ∪ change, staged straight from the merge: the
+    // touched partitions the stage writes nothing for are the emptied
+    // ones, dropped in the same commit
     val mergedAll = (if (sourceWins)
         graft.core.Merge.mergeSourceWins(slice, change, keyCol, order,
           isTombstone)
       else graft.core.Merge.merge(slice, change, keyCol, order, isTombstone))
     // decision-only columns never reach staging or the recorded schema
-    val merged = (if (helperCols.isEmpty) mergedAll
-      else mergedAll.drop(helperCols: _*)).localCheckpoint(true)
-    val present = partTuple(merged)
-      .collect().map(r => partitionCols.indices.map(r.getString)).toSet
-    val drops = touched.filterNot(present.contains)
+    val merged = if (helperCols.isEmpty) mergedAll
+      else mergedAll.drop(helperCols: _*)
     val expected = touched
       .map(v => keyOf(v) -> baseEntries.get(keyOf(v))).toMap
     (touched,
       writeDeltaInternal(spark, warehouseDir, table, merged, partitionCols,
-        dropParts = drops, note = note, expect = Some(expected),
-        expectSchema = expectSchema0.orElse(
-          manifestSchema(spark, warehouseDir, table, Some(baseV)))))
+        dropParts = Nil, note = note, expect = Some(expected),
+        expectSchema = expectSchema0.orElse(recorded),
+        dropIfEmpty = touched,
+        genDerived = !specs.exists(s => change0.columns.contains(s.genCol))))
   }
 
   /** [[mergeVersionedAt]] on a KEY-DERIVED layout: every partition
@@ -2403,7 +2433,11 @@ object ManifestVersioned {
       order: Seq[Column], isTombstone: Column, sourceWins: Boolean,
       note: String, helperCols: Seq[String],
       expectSchema0: Option[StructType]): (Seq[Seq[String]], Int) = {
-    val change = applyGenerated(spark, change0, specs)
+    // the bucket derives from the key at the type it is stored at, so
+    // a change whose key inferred another type (int against a long or
+    // string column) still names the bucket holding its stored rows
+    val recorded = manifestSchema(spark, warehouseDir, table, Some(baseV))
+    val change = applyGenerated(spark, change0, specs, recorded)
     // a caller's own cache of the same plan is left to the caller
     val owned =
       change.storageLevel == org.apache.spark.storage.StorageLevel.NONE
@@ -2431,8 +2465,7 @@ object ManifestVersioned {
       (touched,
         writeDeltaInternal(spark, warehouseDir, table, merged, partitionCols,
           dropParts = Nil, note = note, expect = Some(expected),
-          expectSchema = expectSchema0.orElse(
-            manifestSchema(spark, warehouseDir, table, Some(baseV))),
+          expectSchema = expectSchema0.orElse(recorded),
           dropIfEmpty = touched,
           // a change that carried a generated column itself is verified
           // with the merged rows; derived ones are right by construction
@@ -2806,15 +2839,15 @@ object ManifestVersioned {
     val partCols = partitionColumns(spark, warehouseDir, table).getOrElse(
       throw new IllegalStateException(
         s"$table records no #partcols header — appendRows needs it"))
+    val atEntry = manifestSchema(spark, warehouseDir, table)
     val rows = applyGenerated(spark, rows0,
-      generatedColumns(spark, warehouseDir, table))
+      generatedColumns(spark, warehouseDir, table), atEntry)
     // the caller's frame is FIXED: pin the drift expectation to the
     // schema the frame was derived under — the caller's own read when
     // supplied, else the schema at ENTRY (a retry's refreshed baseV
     // would stop seeing a racing rename/drop and silently mis-commit
     // the stale names)
-    val entrySchema = expectSchema0.orElse(
-      manifestSchema(spark, warehouseDir, table))
+    val entrySchema = expectSchema0.orElse(atEntry)
     val MaxConflicts = 50
     var attempt = 0
     while (true) {

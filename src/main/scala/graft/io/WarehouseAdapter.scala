@@ -368,13 +368,15 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
     * merge path needs ([[mergeChanges]]): the shard column is DECLARED
     * as the generated column `keybucket(shards, keyCol)` ([[GenCols]]),
     * whose value is the deterministic `k<pmod(xxhash64(keyCol),
-    * shards)>` — no per-batch tag — so every row of a key lives in
-    * exactly one generation dir across all nights. The declaration is a
-    * durable table property recorded in this same commit: every later
-    * write path (the adapter verbs, SQL INSERT, `appendRows`,
-    * `writeDelta`) derives or verifies the shard from the key, and the
-    * keyed merge reads a night's touched buckets straight off the
-    * change rows. A bloom policy over `keyCol` serves point lookups.
+    * shards)>` (integral keys hashed as `long`, every batch's key
+    * conformed to the recorded type first) — no per-batch tag — so
+    * every row of a key lives in exactly one generation dir across all
+    * nights, whatever type a night's CSV inference gives the key. The
+    * declaration is a durable table property recorded in this same
+    * commit: every later write path (the adapter verbs, SQL INSERT,
+    * `appendRows`, `writeDelta`) derives or verifies the shard from the
+    * key, and the keyed merge reads a night's touched buckets straight
+    * off the change rows. A bloom policy over `keyCol` serves point lookups.
     * Contrast [[replace]]/[[append]]'s batch-tagged stamp on undeclared
     * tables, which optimizes append-only O(batch) writes instead; the
     * two layouts share the `.mv` table format, `read` and `exists`
@@ -433,8 +435,10 @@ final class ManifestWarehouseAdapter(shards: Int = 8,
   }
 
   /** The key-bucket stamp of a table bootstrapped without the shard
-    * declaration — the same value `keybucket(shards, keyCol)` derives,
-    * so the change side colocates with the table side by construction.
+    * declaration — the value `keybucket(shards, keyCol)` derives. Such
+    * a bootstrap hashed integral keys at their own type, so a stored
+    * row's bucket can differ from the stamp; the general path locates
+    * stored rows by key, so the merge stays correct either way.
     */
   private def keyStamped(df: DataFrame, keyCol: String): DataFrame =
     unstamped(df).withColumn(ShardCol, GenCols.mkColumn(

@@ -608,6 +608,63 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("MergeMode equals OverwriteMode when a night's CSV infers the " +
+      "key as another type: int then long, and string then int") {
+    val root = Files.createTempDirectory("graft-keytype").toString
+    val t1 = 1700000000000L
+    val header = "systemid,systemcreatedat-2000000001," +
+      "systemcreatedby-2000000002,systemmodifiedat-2000000003," +
+      "systemmodifiedby-2000000004,$company,Amount-3"
+    def row(id: String, day: Int, amount: Double) =
+      f"$id,2024-01-01 08:00:00,{u1},2024-01-$day%02d 08:00:00,{u1}," +
+        f"CRONUS,$amount%.1f"
+    def tomb(id: String) = s"$id,,$zero,,$zero,CRONUS,"
+    // Int-Keys: night 1 infers int, night 2 long (one key past 2^31);
+    // Str-Keys: night 1 infers string, night 2 int
+    def night(n: Int): Unit = n match {
+      case 1 =>
+        write(s"$root/src/Int-Keys/f1.csv", t1,
+          header +: (1 to 24).map(i => row(i.toString, 1, i)): _*)
+        write(s"$root/src/Str-Keys/f1.csv", t1,
+          header +: ("a1" +: (2 to 24).map(_.toString))
+            .map(row(_, 1, 1.0)): _*)
+      case 2 =>
+        write(s"$root/src/Int-Keys/f2.csv", t1 + 60000, header,
+          row("3", 2, 30.5), row("9", 2, 90.5), row("14", 2, 140.5),
+          tomb("5"), row("5000000000", 2, 1.5))
+        write(s"$root/src/Str-Keys/f2.csv", t1 + 60000, header,
+          row("7", 2, 70.5), row("8", 2, 80.5), tomb("11"),
+          row("25", 2, 2.5))
+    }
+    val ow = manifestCfg(root, "ow", Pipeline.OverwriteMode)
+    val mg = manifestCfg(root, "mg", Pipeline.MergeMode)
+    def canon(cfg: Pipeline.Config, table: String) = {
+      val df = cfg.adapter.read(spark, cfg.warehouseDir, table)
+      val cols = df.columns.sorted.toSeq
+      (df.schema.fields.map(f => (f.name, f.dataType.simpleString))
+        .sortBy(_._1).toSeq,
+        df.select(cols.map(col): _*).collect()
+          .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+    }
+    (1 to 2).foreach { n =>
+      night(n)
+      assert(rows(mg) === rows(ow), s"night $n")
+      Seq("intkeys", "strkeys").foreach { t =>
+        assert(canon(mg, t) === canon(ow, t), s"night $n: $t diverged")
+        val ids = mg.adapter.read(spark, mg.warehouseDir, t)
+          .select("systemid")
+        assert(ids.count() === ids.distinct().count(),
+          s"night $n: $t holds a key twice")
+      }
+    }
+    val types = Seq("intkeys", "strkeys").map(t => mg.adapter
+      .read(spark, mg.warehouseDir, t).schema("systemid").dataType)
+    assert(types === Seq(org.apache.spark.sql.types.LongType,
+      org.apache.spark.sql.types.StringType))
+    assert(mg.adapter.read(spark, mg.warehouseDir, "intkeys").count() === 24)
+    assert(mg.adapter.read(spark, mg.warehouseDir, "strkeys").count() === 24)
+  }
+
   test("SQL INSERT into a key-shard-declared table verifies the shard: " +
       "a wrong value is rejected, the derived one lands") {
     import spark.implicits._

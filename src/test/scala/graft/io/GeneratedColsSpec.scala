@@ -271,6 +271,70 @@ class GeneratedColsSpec extends AnyFunSuite {
       Seq(ZoneEq("id", Long.box(3L))), deriveTz = true).isEmpty)
   }
 
+  test("keybucket is type-stable: integral keys hash as long, a batch " +
+      "derives it at the recorded type, and a hash-moving widening of " +
+      "its source rejects") {
+    val spec = GenCols.GenSpec("g", "keybucket", Some(8L), "x")
+    val ids = (-40 until 40).map(_ * 1000003)
+    def shards(df: org.apache.spark.sql.DataFrame) =
+      df.select(GenCols.mkColumn(spec, df.schema("x").dataType)).as[String]
+        .collect().toSeq
+    val asLong = shards(ids.map(_.toLong).toDF("x"))
+    assert(shards(ids.toDF("x")) === asLong)
+    assert(shards(ids.map(_.toShort).toDF("x")) ===
+      shards(ids.map(_.toShort.toLong).toDF("x")))
+    assert(asLong.distinct.size === 8)
+    def bucketsOf(w: String) = ManifestVersioned.read(spark, w, "t")
+      .select(col("id").cast("string"), col("p_k")).as[(String, String)]
+      .collect().toSet
+    // an int batch into a long key column lands in the long key's bucket
+    val wl = wh()
+    ManifestVersioned.writeFullMulti(spark, wl, "t",
+      (0 until 64).map(i => (i.toLong, "a")).toDF("id", "v"), Seq("p_k"),
+      properties = Map("graft.generated.p_k" -> "keybucket(8, id)"))
+    ManifestVersioned.appendRows(spark, wl, "t",
+      (64 until 96).map(i => (i, "b")).toDF("id", "v"))
+    assert(bucketsOf(wl) === (0 until 96).map(_.toLong).toDF("x")
+      .select(col("x").cast("string"), GenCols.mkColumn(spec, LongType))
+      .as[(String, String)].collect().toSet)
+    // an int batch into a double key column derives over the stored
+    // double (5.0 hashes unlike 5), and the verification gate agrees
+    val wd = wh()
+    ManifestVersioned.writeFullMulti(spark, wd, "t",
+      (0 until 32).map(i => (i.toDouble, "a")).toDF("id", "v"), Seq("p_k"),
+      properties = Map("graft.generated.p_k" -> "keybucket(8, id)"))
+    ManifestVersioned.writeDeltaMulti(spark, wd, "t",
+      (32 until 48).map(i => (i, "b")).toDF("id", "v"), Seq("p_k"))
+    assert(ManifestVersioned.read(spark, wd, "t").schema("id").dataType ===
+      DoubleType)
+    // (a delta replaces the partitions it stages: only its rows remain
+    // in them, so compare those)
+    assert(bucketsOf(wd).filter(_._1.toDouble >= 32) ===
+      (32 until 48).map(_.toDouble).toDF("x")
+      .select(col("x").cast("string"), GenCols.mkColumn(spec, DoubleType))
+      .as[(String, String)].collect().toSet)
+    // int -> long keeps every bucket; int -> double would move them
+    val wi = wh()
+    ManifestVersioned.writeFullMulti(spark, wi, "t",
+      (0 until 16).map(i => (i, "a")).toDF("id", "v"), Seq("p_k"),
+      properties = Map("graft.generated.p_k" -> "keybucket(8, id)"))
+    val v0 = ManifestVersioned.currentVersion(spark, wi, "t")
+    val e = intercept[IllegalArgumentException] {
+      ManifestVersioned.appendRows(spark, wi, "t",
+        Seq((16.0, "b")).toDF("id", "v"))
+    }
+    assert(e.getMessage.contains("cannot widen id"), e.getMessage)
+    assert(ManifestVersioned.currentVersion(spark, wi, "t") === v0)
+    ManifestVersioned.appendRows(spark, wi, "t",
+      Seq((3L, "b"), (5000000000L, "c")).toDF("id", "v"))
+    val widened = bucketsOf(wi)
+    assert(ManifestVersioned.read(spark, wi, "t").schema("id").dataType ===
+      LongType)
+    assert(widened === (0 until 16).map(_.toLong).:+(5000000000L).toDF("x")
+      .select(col("x").cast("string"), GenCols.mkColumn(spec, LongType))
+      .as[(String, String)].collect().toSet)
+  }
+
   test("months and trunc transforms derive range pruning; Gt/Lt " +
       "collapse to the inclusive generated bound") {
     val w = wh()
