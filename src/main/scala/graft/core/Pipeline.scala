@@ -178,10 +178,8 @@ object Pipeline {
   /** Startup crash recovery for everything a died run can leave behind
     * in the warehouse — delegated to the substrate
     * ([[graft.io.WarehouseAdapter.recoverAll]]): the parquet adapter
-    * rolls partitioned-merge commits forward (or sweeps their
-    * pre-commit staging) and completes/sweeps interrupted replace
-    * swaps; other substrates heal their own debris. Idempotent; a
-    * no-op on a clean warehouse.
+    * completes or sweeps interrupted replace swaps; other substrates
+    * heal their own debris. Idempotent; a no-op on a clean warehouse.
     */
   def recover(spark: SparkSession, cfg: Config): Unit =
     cfg.adapter.recoverAll(spark, cfg.warehouseDir)

@@ -20,8 +20,9 @@ import graft.io.Tables
   *     rewritten via read-modify-write with checkpoint isolation, exactly
   *     the [[IncrementalAgg.appendStored]] pattern. At key cardinalities
   *     where even this slice is too big to rewrite, it is the shape
-  *     [[graft.core.Merge.mergePartitioned]] exists for — partition
-  *     `_cur` and let the night rewrite only touched partitions.
+  *     [[graft.io.ManifestVersioned.mergeVersioned]] exists for — keep
+  *     `_cur` as a partitioned manifest table and let the night rewrite
+  *     only touched partitions.
   *
   * A nightly batch may carry SEVERAL versions of a key: the batch's own
   * chain closes internally ([[graft.core.Merge.scdHistory]] on the batch),

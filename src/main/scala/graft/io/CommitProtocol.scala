@@ -43,17 +43,14 @@ final class SchemaMappingConflictException(msg: String)
 final class ConcurrentPropertyConflictException(msg: String)
   extends java.io.IOException(msg)
 
-/** The ATOMIC publish/claim primitives every versioned layer commits
-  * through, with an explicit substrate-honesty matrix and a pluggable
+/** The ATOMIC publish primitive the manifest layer commits through,
+  * with an explicit substrate-honesty matrix and a pluggable
   * adapter seam for stores whose rename/create semantics differ.
   *
-  * Primitives:
-  *  - `publish(target, content)` — make `target` exist WITH its full
-  *    content, iff it does not exist; returns false when a peer owns the
-  *    name (the optimistic-concurrency "lost race" signal). A reader
-  *    must never observe `target` half-written.
-  *  - `claim(target)` — create an empty marker iff absent (version
-  *    number / epoch claims, where existence IS the payload).
+  * Primitive: `publish(target, content)` — make `target` exist WITH its
+  * full content, iff it does not exist; returns false when a peer owns
+  * the name (the optimistic-concurrency "lost race" signal). A reader
+  * must never observe `target` half-written.
   *
   * Substrate matrix (what each default genuinely guarantees):
   *
@@ -74,8 +71,8 @@ final class ConcurrentPropertyConflictException(msg: String)
   * conditional primitive (S3 `If-None-Match: *` PUT, GCS
   * `ifGenerationMatch: 0`, a DynamoDB/ZK lock), then subclass the
   * reusable CONTRACT KIT (`graft.io.AdapterContractKit`, src/test) —
-  * it pins the four properties every substrate must uphold:
-  * publish-wins-exactly-once under racing threads, claim exclusivity,
+  * it pins the three properties every substrate must uphold:
+  * publish-wins-exactly-once under racing threads,
   * content-complete-at-visibility, and race-vs-failure signalling.
   * The kit runs against [[LocalAdapter]], [[RenameAdapter]] (under an
   * HDFS-contract rename emulation — plain local rename REPLACES, which
@@ -94,10 +91,6 @@ object CommitProtocol {
       */
     def publish(fs: FileSystem, tmpDir: Path, target: Path,
         content: Array[Byte]): Boolean
-    /** Atomically create an empty `target` iff absent; false on a lost
-      * race, throw on genuine failure.
-      */
-    def claim(fs: FileSystem, target: Path): Boolean
   }
 
   private val registry =
@@ -125,12 +118,8 @@ object CommitProtocol {
     adapterFor(fs.getScheme).publish(fs, tmpDir, target,
       content.getBytes("UTF-8"))
 
-  def claim(fs: FileSystem, target: Path): Boolean =
-    adapterFor(fs.getScheme).claim(fs, target)
-
   /** Local filesystems: hard-link publish (the link appears atomically
-    * WITH its content — `link(2)` fails with EEXIST on a lost race) and
-    * `File.createNewFile` claims (O_CREAT|O_EXCL).
+    * WITH its content — `link(2)` fails with EEXIST on a lost race).
     */
   object LocalAdapter extends Adapter {
     def publish(fs: FileSystem, tmpDir: Path, target: Path,
@@ -151,8 +140,6 @@ object CommitProtocol {
       fs.delete(tmp, false)
       ok
     }
-    def claim(fs: FileSystem, target: Path): Boolean =
-      new java.io.File(target.toUri.getPath).createNewFile()
   }
 
   /** SAMPLE conditional-write adapter — the shape a real object-store
@@ -198,12 +185,6 @@ object CommitProtocol {
       }
       true
     }
-    def claim(fs: FileSystem, target: Path): Boolean = {
-      if (!registry.add(target.toString)) return false
-      try { fs.create(target, true).close(); true }
-      catch { case e: java.io.IOException =>
-        registry.remove(target.toString); throw e }
-    }
   }
 
   /** Rename-based publish: write the FULL content to a unique tmp file,
@@ -228,15 +209,5 @@ object CommitProtocol {
         s"atomic publish rename failed without a competing $target " +
           "(not a version race — check permissions/quota/connectivity)")
     }
-    def claim(fs: FileSystem, target: Path): Boolean =
-      try { fs.create(target, false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case e: java.io.IOException =>
-          // a second chance for stores that signal EEXIST as a bare
-          // IOException: re-check existence; anything else is genuine
-          if (fs.exists(target)) false else throw e
-      }
   }
 }

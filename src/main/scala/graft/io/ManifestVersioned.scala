@@ -273,23 +273,25 @@ object ManifestVersioned {
     * count, recorded row total (NULL when any entry predates counts;
     * an upper bound under outstanding delete vectors), and the
     * partition layout. Driver-side manifest headers only — zero data
-    * reads, zero listing; the DESCRIBE-HISTORY-shaped audit every
-    * operator asks for before touching a table.
+    * reads, one listing, and one parse per version; the
+    * DESCRIBE-HISTORY-shaped audit every operator asks for before
+    * touching a table.
     */
   def history(spark: SparkSession, warehouseDir: String,
       table: String): DataFrame = {
     import spark.implicits._
+    val base = root(warehouseDir, table)
+    val fs = fsOf(spark, base)
     listVersions(spark, warehouseDir, table).reverse.map { v =>
-      val entries = manifestEntries(spark, warehouseDir, table, Some(v))
+      val (hdr, entries) = loadManifest(fs, manifestPath(base, v))
+      val rows = entries.values.map(_.rows)
       (v,
-        commitTimestamp(spark, warehouseDir, table, Some(v))
-          .map(new java.sql.Timestamp(_)).orNull,
-        manifestNote(spark, warehouseDir, table, Some(v)).orNull,
+        hdr.get("ts").map(t => new java.sql.Timestamp(t.toLong)).orNull,
+        hdr.get("note").orNull,
         entries.size.toLong,
-        rowCountUpper(spark, warehouseDir, table, Some(v))
-          .map(java.lang.Long.valueOf).orNull,
-        partitionColumns(spark, warehouseDir, table, Some(v))
-          .map(_.mkString(",")).orNull)
+        // rowCountUpper's rule: unbounded once any entry predates counts
+        (if (rows.exists(_ < 0)) null else java.lang.Long.valueOf(rows.sum)),
+        hdr.get("partcols").orNull)
     }.toDF("version", "committed_at", "note", "n_partitions", "n_rows",
       "part_cols")
   }
@@ -2216,10 +2218,13 @@ object ManifestVersioned {
     * GBs of write amplification per night AND keeps every pre-merge
     * night time-travelable.
     *
-    * Shape mirrors `Merge.mergePartitionedPlan`: touched set = partitions
-    * holding any change key (column-pruned semi-join) ∪ partitions of
-    * non-tombstone change rows (both metadata-scale collects — partition
-    * VALUES); the merge itself runs over slice ∪ change only.
+    * Touched set = partitions holding any change key (zone/bloom-pruned,
+    * column-pruned semi-join) ∪ partitions of non-tombstone change rows
+    * (both metadata-scale collects — partition VALUES); the merge itself
+    * runs over slice ∪ change only. On a key-derived layout (every
+    * partition column a declared transform of the key, e.g. the
+    * `keybucket` shard) the touched set is the change rows' own
+    * partitions and the merge is one shuffle ([[mergeKeyDerivedAt]]).
     *
     * CONCURRENCY: the whole read-merge-stage derivation pins one
     * committed base version; the commit then EXPECTS every touched

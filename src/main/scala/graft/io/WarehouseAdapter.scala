@@ -136,11 +136,10 @@ object ParquetWarehouseAdapter extends WarehouseAdapter {
   def replace(spark: SparkSession, warehouseDir: String, table: String,
       df: DataFrame): Unit =
     Tables.replaceWarehouse(spark, warehouseDir, table, df)
-  /** Partitioned-merge commit staging AND interrupted replace swaps —
-    * everything the parquet write paths can leave mid-flight.
+  /** Interrupted replace swaps (`{table}._swap`) — the one thing the
+    * parquet write paths can leave mid-flight.
     */
   def recoverAll(spark: SparkSession, warehouseDir: String): Unit = {
-    graft.core.Merge.recoverAllMergeCommits(spark, warehouseDir)
     val root = new Path(warehouseDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.DeclaredQuery
 import graft.core.{Merge, Normalize, Temporal, WatermarkStore}
-import graft.io.{Tables, Versioned}
+import graft.io.{GenCols, ManifestVersioned, Tables}
 
 /** Declared queries for every reference-derived operator (SURVEY.md §2),
   * re-expressed over the driver test corpus so each one is verifiable against
@@ -81,21 +81,23 @@ object ReferenceQueries {
     updates.unionAll(tombstones)
   }
 
-  /** Pristine partitioned seed every sample: STATIC overwrite semantics
-    * via dir delete — a dynamic overwrite would leave last run's 'U'
-    * partition standing in the seed. Drops any key-locate index too (the
-    * non-indexed path must measure without one; the indexed setup
-    * rebuilds it).
+  /** Pristine manifest table every sample: the setup drops `table`'s
+    * whole `.mv` root (every version of it), then commits `df` as
+    * version 1 — a query that moves rows across partitions never sees
+    * last run's partitions standing in its seed.
     */
-  private def seedMergeWarehouse(s: SparkSession, dir: String,
-      wh: String): Unit = {
-    for (tbl <- Seq("orders_part", Merge.keyIndexName("orders_part"))) {
-      val p = new org.apache.hadoop.fs.Path(s"$wh/$tbl")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    Tables.writeWarehousePartitioned(t(s, dir, "orders"), wh, "orders_part",
-      Seq("o_orderstatus"))
+  private def seedManifest(s: SparkSession, wh: String, table: String,
+      df: DataFrame, partCols: Seq[String],
+      properties: Map[String, String] = Map.empty): Unit = {
+    val base = new org.apache.hadoop.fs.Path(s"$wh/$table.mv")
+    base.getFileSystem(s.sparkContext.hadoopConfiguration).delete(base, true)
+    ManifestVersioned.writeFullMulti(s, wh, table, df, partCols,
+      properties = properties)
   }
+
+  /** The order every flagship-merge query ranks a key's versions by. */
+  private val mergeOrder = Seq(col("o_orderdate").desc_nulls_last,
+    col("o_totalprice").desc_nulls_last)
 
   val all: Seq[DeclaredQuery] = Seq(
 
@@ -466,32 +468,31 @@ object ReferenceQueries {
               FROM ranked WHERE rn = 1""")),
 
     // J1+W1+U2+K2 — the SAME flagship merge, executed through the
-    // PARTITION-PRUNED warehouse path (Merge.mergePartitioned): target is
-    // seeded as a parquet table partitioned by o_orderstatus, the change-set
-    // is applied via touched-partition resolution + dynamic partition
-    // overwrite, and the read-back table is the result. The oracle is the
-    // SAME SQL as q_merge_full — output equivalence of the pruned write
-    // path and the logical merge IS the check (MergePartitionedSpec
-    // additionally pins that untouched partitions' files are not
-    // rewritten). Updates move rows 'O'/'F'/'P' -> 'U' across partition
-    // directories, so the cross-partition-move case is exercised, not just
-    // in-place rewrite.
+    // PARTITION-PRUNED manifest merge (ManifestVersioned.mergeVersioned)
+    // on a table partitioned by o_orderstatus: the change-set is applied
+    // via touched-partition resolution, the touched partitions are
+    // rewritten as new generations in one committed version, and the
+    // read-back table is the result. The oracle is the SAME SQL as
+    // q_merge_full — output equivalence of the pruned write path and the
+    // logical merge IS the check (ManifestVersionedSpec additionally pins
+    // that untouched partitions are not rewritten). Updates move rows
+    // 'O'/'F'/'P' -> 'U' across partitions, so the cross-partition-move
+    // case is exercised, not just in-place rewrite (the same merge on an
+    // o_orderpriority layout never moves a row).
     DeclaredQuery(
       "q_merge_partitioned",
       (s, dir) => {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val wh = s"/tmp/graft_mergewh$tag"
-        Merge.mergePartitioned(s, wh, "orders_part",
+        ManifestVersioned.mergeVersioned(s, wh, "orders_part",
           mergeChangeSet(s, dir), "o_orderkey", "o_orderstatus",
-          Seq(col("o_orderdate").desc_nulls_last, col("o_totalprice").desc_nulls_last),
-          col("o_orderstatus") === "DELETED")
-        Tables.readWarehouse(s, wh, "orders_part")
-          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "o_orderdate", "o_orderpriority")
+          mergeOrder, col("o_orderstatus") === "DELETED")
+        ManifestVersioned.read(s, wh, "orders_part")
       },
       setup = Some((s, dir) =>
-        seedMergeWarehouse(s, dir,
-          s"/tmp/graft_mergewh${dir.replaceAll("[^a-zA-Z0-9]", "_")}")),
+        seedManifest(s,
+          s"/tmp/graft_mergewh${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
+          "orders_part", t(s, dir, "orders"), Seq("o_orderstatus"))),
       oracle = Some("""WITH change AS (
                 SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
                        o_totalprice + 1000.0 AS o_totalprice,
@@ -519,33 +520,32 @@ object ReferenceQueries {
                      o_orderdate, o_orderpriority
               FROM ranked WHERE rn = 1""")),
 
-    // The SAME flagship merge through the INDEXED partitioned path
-    // (Merge.mergePartitionedIndexed): a key→partition locate index is
-    // built once beside the table, the change-set's touched partitions are
-    // resolved by joining change keys against that slim metadata relation
-    // (zero reads of the data table outside the pruned slice —
-    // MergeKeyIndexSpec pins the locate plan's scan set), and the index is
-    // maintained in the same dynamic-overwrite pass as the data. Oracle =
-    // the same SQL as q_merge_full: output equivalence of locate-scan,
-    // indexed, and logical merge is the three-way check.
+    // The SAME flagship merge on a KEY-BUCKETED manifest table: the
+    // partition column `_graft_shard` is declared as the generated column
+    // keybucket(8, o_orderkey) — the layout the warehouse adapter's
+    // mergeBootstrap declares — so mergeVersioned takes its one-pass
+    // key-derived path: the touched buckets are the change rows' own (no
+    // locate against stored rows), one shuffle by bucket merges them, and
+    // each touched bucket is written as one file. Oracle = the same SQL
+    // as q_merge_full: output equivalence of the general, key-derived and
+    // logical merge is the three-way check.
     DeclaredQuery(
       "q_merge_partitioned_idx",
       (s, dir) => {
         val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
         val wh = s"/tmp/graft_mergeidxwh$tag"
-        Merge.mergePartitionedIndexed(s, wh, "orders_part",
-          mergeChangeSet(s, dir), "o_orderkey", "o_orderstatus",
-          Seq(col("o_orderdate").desc_nulls_last, col("o_totalprice").desc_nulls_last),
-          col("o_orderstatus") === "DELETED")
-        Tables.readWarehouse(s, wh, "orders_part")
+        ManifestVersioned.mergeVersioned(s, wh, "orders_kb",
+          mergeChangeSet(s, dir), "o_orderkey", "_graft_shard",
+          mergeOrder, col("o_orderstatus") === "DELETED")
+        ManifestVersioned.read(s, wh, "orders_kb")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate", "o_orderpriority")
       },
-      setup = Some((s, dir) => {
-        val wh = s"/tmp/graft_mergeidxwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        seedMergeWarehouse(s, dir, wh)
-        Merge.buildKeyIndex(s, wh, "orders_part", "o_orderkey", "o_orderstatus")
-      }),
+      setup = Some((s, dir) =>
+        seedManifest(s,
+          s"/tmp/graft_mergeidxwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
+          "orders_kb", t(s, dir, "orders"), Seq("_graft_shard"),
+          Map(GenCols.Prefix + "_graft_shard" -> "keybucket(8, o_orderkey)"))),
       oracle = Some("""WITH change AS (
                 SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
                        o_totalprice + 1000.0 AS o_totalprice,
@@ -749,35 +749,32 @@ object ReferenceQueries {
                 (3, 'gamma', 'lima', 3.5, 1))
               AS t(id, name, address_city, lat, n)""")),
 
-    // Snapshot-versioned table TIME TRAVEL: two committed versions of a
-    // dimension read side by side — the reference's full-overwrite sink
-    // upgraded to MVCC (immutable version dirs + one atomic pointer
-    // commit), so readers never see a torn table, history stays
-    // addressable, and rollback is a pointer move. Oracle recomputes
-    // both snapshots from the source.
+    // Manifest-versioned table TIME TRAVEL: two committed full
+    // snapshots of a dimension read side by side — the reference's
+    // full-overwrite sink upgraded to MVCC (immutable generation dirs +
+    // one atomic manifest commit per version), so readers never see a
+    // torn table and history stays addressable by version number.
+    // Oracle recomputes both snapshots from the source.
     DeclaredQuery(
       "q_time_travel",
       (s, dir) => {
         val wh = s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        Versioned.readVersioned(s, wh, "cust_dim", Some(1))
+        ManifestVersioned.read(s, wh, "cust_dim", Some(1))
           .withColumn("version", lit(1L))
-          .unionByName(Versioned.readVersioned(s, wh, "cust_dim")
+          .unionByName(ManifestVersioned.read(s, wh, "cust_dim")
             .withColumn("version", lit(2L)))
       },
       setup = Some((s, dir) => {
         val wh = s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val base = new org.apache.hadoop.fs.Path(s"$wh/cust_dim.v")
-        base.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(base, true)
         val c = t(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        Versioned.writeVersioned(s, wh, "cust_dim",
-          c.filter(col("c_custkey") % 3 === 0))
-        Versioned.writeVersioned(s, wh, "cust_dim",
+        seedManifest(s, wh, "cust_dim",
+          c.filter(col("c_custkey") % 3 === 0), Seq("c_mktsegment"))
+        ManifestVersioned.writeFull(s, wh, "cust_dim",
           c.filter(col("c_custkey") % 3 =!= 2)
             .withColumn("c_acctbal",
               when(col("c_custkey") % 3 === 1, col("c_acctbal") + 10.0)
-                .otherwise(col("c_acctbal"))))
+                .otherwise(col("c_acctbal"))), "c_mktsegment")
       }),
       oracle = Some("""SELECT c_custkey, c_mktsegment, c_acctbal,
                      CAST(1 AS BIGINT) AS version
@@ -790,31 +787,27 @@ object ReferenceQueries {
               FROM customer WHERE c_custkey % 3 <> 2""")),
 
     // MERGE composed with the VERSIONED sink: the nightly merge writes
-    // its result as the next snapshot instead of overwriting — readers
-    // keep last night's version until the atomic pointer commit, and the
-    // pre-merge snapshot stays addressable for diff/rollback. Oracle =
-    // q_merge_full's: path equivalence through the versioned layer IS
-    // the check.
+    // its whole result as the next full snapshot (writeFull) instead of
+    // overwriting — readers keep last night's version until the atomic
+    // manifest commit, and the pre-merge snapshot stays addressable for
+    // diff/restore. Oracle = q_merge_full's: path equivalence through the
+    // versioned layer IS the check.
     DeclaredQuery(
       "q_merge_versioned",
       (s, dir) => {
         val wh = s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val target = Versioned.readVersioned(s, wh, "orders_ver")
+        val target = ManifestVersioned.read(s, wh, "orders_ver")
         val merged = Merge.merge(
-          target, mergeChangeSet(s, dir), "o_orderkey",
-          Seq(col("o_orderdate").desc_nulls_last,
-            col("o_totalprice").desc_nulls_last),
+          target, mergeChangeSet(s, dir), "o_orderkey", mergeOrder,
           col("o_orderstatus") === "DELETED")
-        Versioned.writeVersioned(s, wh, "orders_ver", merged)
-        Versioned.readVersioned(s, wh, "orders_ver")
+        ManifestVersioned.writeFull(s, wh, "orders_ver", merged,
+          "o_orderpriority")
+        ManifestVersioned.read(s, wh, "orders_ver")
       },
-      setup = Some((s, dir) => {
-        val wh = s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val base = new org.apache.hadoop.fs.Path(s"$wh/orders_ver.v")
-        base.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(base, true)
-        Versioned.writeVersioned(s, wh, "orders_ver", t(s, dir, "orders"))
-      }),
+      setup = Some((s, dir) =>
+        seedManifest(s,
+          s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
+          "orders_ver", t(s, dir, "orders"), Seq("o_orderpriority"))),
       oracle = Some("""WITH change AS (
                 SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
                        o_totalprice + 1000.0 AS o_totalprice,
@@ -844,33 +837,31 @@ object ReferenceQueries {
 
     // DIFF composed with the VERSIONED table: "what changed between
     // yesterday's and today's snapshot" — the audit the version layer
-    // makes cheap (both sides are immutable dirs; one full-outer
-    // co-shuffle answers it). Fixture exercises all three statuses.
+    // makes cheap (both sides are immutable generation dirs; one
+    // full-outer co-shuffle answers it). Fixture exercises all three
+    // statuses.
     DeclaredQuery(
       "q_version_diff",
       (s, dir) => {
         val wh = s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
         graft.ext.Diff.diff(
-            Versioned.readVersioned(s, wh, "cust_dim2", Some(1)),
-            Versioned.readVersioned(s, wh, "cust_dim2", Some(2)),
+            ManifestVersioned.read(s, wh, "cust_dim2", Some(1)),
+            ManifestVersioned.read(s, wh, "cust_dim2", Some(2)),
             Seq("c_custkey"))
           .select(col("c_custkey"), col("status"),
             concat_ws(",", col("changed_cols")).as("changed_cols"))
       },
       setup = Some((s, dir) => {
         val wh = s"/tmp/graft_verwh${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val base = new org.apache.hadoop.fs.Path(s"$wh/cust_dim2.v")
-        base.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(base, true)
         val c = t(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        Versioned.writeVersioned(s, wh, "cust_dim2",
-          c.filter(col("c_custkey") % 3 =!= 1))
-        Versioned.writeVersioned(s, wh, "cust_dim2",
+        seedManifest(s, wh, "cust_dim2",
+          c.filter(col("c_custkey") % 3 =!= 1), Seq("c_mktsegment"))
+        ManifestVersioned.writeFull(s, wh, "cust_dim2",
           c.filter(col("c_custkey") % 3 =!= 2)
             .withColumn("c_acctbal",
               when(col("c_custkey") % 6 === 0, col("c_acctbal") + 10.0)
-                .otherwise(col("c_acctbal"))))
+                .otherwise(col("c_acctbal"))), "c_mktsegment")
       }),
       oracle = Some("""SELECT c_custkey, 'added' AS status, '' AS changed_cols
               FROM customer WHERE c_custkey % 3 = 1

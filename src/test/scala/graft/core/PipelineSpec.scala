@@ -225,16 +225,6 @@ class PipelineSpec extends AnyFunSuite {
     Seq((2L, "old")).toDF("id", "v").write.parquet(s"${cfg.warehouseDir}/t2")
     Seq((2L, "uncommitted")).toDF("id", "v").write
       .parquet(s"${cfg.warehouseDir}/t2._swap")
-    // shape 3: a partitioned merge died after its manifest — roll forward
-    Seq((3L, "old", "A")).toDF("id", "v", "p").write
-      .partitionBy("p").parquet(s"${cfg.warehouseDir}/t3")
-    Seq((3L, "merged", "A")).toDF("id", "v", "p").write
-      .partitionBy("p").parquet(s"${cfg.warehouseDir}/${Merge.stagedName("t3")}")
-    Merge.writeMergeManifest(spark, cfg.warehouseDir, "t3",
-      Seq(Merge.MergeCommitEntry("t3", "p=A", survived = true)))
-    // shape 4: pre-commit merge staging with no manifest — sweep
-    Seq((4L, "junk", "A")).toDF("id", "v", "p").write
-      .partitionBy("p").parquet(s"${cfg.warehouseDir}/${Merge.stagedName("t4")}")
 
     Pipeline.recover(spark, cfg)
 
@@ -243,14 +233,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"${cfg.warehouseDir}/t2")
       .as[(Long, String)].collect().toSeq === Seq((2L, "old")))
     assert(!fs.exists(new Path(s"${cfg.warehouseDir}/t2._swap")))
-    assert(spark.read.parquet(s"${cfg.warehouseDir}/t3")
-      .select($"id", $"v").as[(Long, String)].collect().toSeq
-      === Seq((3L, "merged")))
-    assert(!fs.exists(new Path(
-      s"${cfg.warehouseDir}/${Merge.stagedName("t3")}")))
-    assert(!fs.exists(new Path(Merge.mergeManifestPath(cfg.warehouseDir, "t3"))))
-    assert(!fs.exists(new Path(
-      s"${cfg.warehouseDir}/${Merge.stagedName("t4")}")))
     // and recovery is idempotent
     Pipeline.recover(spark, cfg)
     assert(spark.read.parquet(s"${cfg.warehouseDir}/t1").count() === 1)

@@ -10,18 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.CommitProtocol.Adapter
 
 /** REUSABLE contract kit for [[CommitProtocol.Adapter]] implementations
-  * — the four properties every commit substrate must uphold before a
+  * — the three properties every commit substrate must uphold before a
   * manifest table can trust it (subclass with a factory; the kit
   * generates the suite):
   *
   *  1. PUBLISH WINS EXACTLY ONCE: N racing publishers of distinct
   *     contents to one name — exactly one `true`, and the durable
   *     content is the winner's, byte-identical.
-  *  2. CLAIM EXCLUSIVITY: N racing claims — exactly one `true`.
-  *  3. CONTENT-COMPLETE-AT-VISIBILITY: a reader that observes the name
+  *  2. CONTENT-COMPLETE-AT-VISIBILITY: a reader that observes the name
   *     existing reads the COMPLETE content (never a prefix) — the
   *     property whose absence was the pre-r8 torn-manifest window.
-  *  4. RACE-vs-FAILURE SIGNALLING: publishing over an existing name
+  *  3. RACE-vs-FAILURE SIGNALLING: publishing over an existing name
   *     returns `false` (a race, retried by the OCC loop); a genuine
   *     substrate failure (here: an unwritable target area) THROWS —
   *     never `false` (which would spin the loop on a broken store) and
@@ -37,7 +36,7 @@ import graft.io.CommitProtocol.Adapter
 abstract class AdapterContractKit extends AnyFunSuite {
 
   /** Adapter under test — fresh per test (stateful adapters must not
-    * leak claims across tests).
+    * leak published names across tests).
     */
   def newAdapter(): Adapter
 
@@ -100,30 +99,6 @@ abstract class AdapterContractKit extends AnyFunSuite {
     }
   }
 
-  test(s"$adapterName: claim is exclusive") {
-    val adapter = newAdapter()
-    val fs = newFs()
-    val dir = workspace(fs)
-    for (round <- 0 until 5) {
-      val target = new Path(dir, s"claim.$round")
-      val threads = 8
-      val start = new CountDownLatch(1)
-      val pool = Executors.newFixedThreadPool(threads)
-      val won =
-        try {
-          val futures = (0 until threads).map { _ =>
-            pool.submit(new java.util.concurrent.Callable[Boolean] {
-              def call(): Boolean = { start.await(); adapter.claim(fs, target) }
-            })
-          }
-          start.countDown()
-          futures.map(_.get(60, TimeUnit.SECONDS))
-        } finally pool.shutdown()
-      assert(won.count(identity) === 1,
-        s"round $round: expected exactly one claim winner")
-    }
-  }
-
   test(s"$adapterName: content is complete at visibility (no torn reads)") {
     val adapter = newAdapter()
     val fs = newFs()
@@ -167,8 +142,6 @@ abstract class AdapterContractKit extends AnyFunSuite {
     // racing an existing name: false, and the owner's content survives
     assert(!adapter.publish(fs, dir, target, "second".getBytes("UTF-8")))
     assert(new String(readAll(fs, target), "UTF-8") === "first")
-    assert(adapter.claim(fs, new Path(dir, "c1")))
-    assert(!adapter.claim(fs, new Path(dir, "c1")))
     // genuine failure: a target whose "parent directory" is a plain
     // FILE can never be created — must THROW (a false here would spin
     // the OCC loop on a broken store forever). Permission bits are no
@@ -210,20 +183,6 @@ class RenameAdapterContractSpec extends AdapterContractKit {
       override def rename(src: Path, dst: Path): Boolean =
         lock.synchronized {
           if (exists(dst)) false else super.rename(src, dst)
-        }
-      // HDFS's create(overwrite=false) fails ATOMICALLY on existing
-      // paths (one NameNode op); the local check-then-create is a
-      // TOCTOU race, so serialize it the way the NameNode does
-      override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-          replication: Short, blockSize: Long,
-          progress: org.apache.hadoop.util.Progressable)
-          : org.apache.hadoop.fs.FSDataOutputStream =
-        lock.synchronized {
-          if (!overwrite && exists(f))
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-              s"$f already exists")
-          super.create(f, overwrite, bufferSize, replication, blockSize,
-            progress)
         }
     }
     raw.initialize(java.net.URI.create("file:///"), new Configuration())

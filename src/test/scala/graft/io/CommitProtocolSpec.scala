@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The atomic publish/claim commit primitives: full-content-or-absent
+/** The atomic publish commit primitive: full-content-or-absent
   * visibility, lost-race signalling ONLY on target-exists, genuine
   * failures rethrown (not retried as phantom races), and the
   * object-store adapter registration seam.
@@ -36,14 +36,6 @@ class CommitProtocolSpec extends AnyFunSuite {
     // no tmp debris left behind by either attempt
     assert(fs(dir).listStatus(dir).map(_.getPath.getName).toSet === Set(
       "_manifest.v00001"))
-  }
-
-  test("claim: exactly one of two claimants wins") {
-    val dir = new Path(Files.createTempDirectory("graft-cp2").toString)
-    fs(dir).mkdirs(dir)
-    val target = new Path(dir, "_vclaim.00001")
-    assert(CommitProtocol.claim(fs(dir), target))
-    assert(!CommitProtocol.claim(fs(dir), target))
   }
 
   test("RenameAdapter: target never exists without its complete content") {
@@ -90,8 +82,6 @@ class CommitProtocolSpec extends AnyFunSuite {
     object Refusing extends CommitProtocol.Adapter {
       def publish(fs: org.apache.hadoop.fs.FileSystem, tmpDir: Path,
           target: Path, content: Array[Byte]): Boolean =
-        throw new UnsupportedOperationException("refusing adapter")
-      def claim(fs: org.apache.hadoop.fs.FileSystem, target: Path): Boolean =
         throw new UnsupportedOperationException("refusing adapter")
     }
     assert(CommitProtocol.adapterFor("s3a") === CommitProtocol.RenameAdapter,

@@ -81,11 +81,19 @@ class FaultFs extends RawLocalFileSystem {
     if (f.getName.endsWith(".mv")) FaultFs.manifestListings.incrementAndGet()
     super.listStatus(f)
   }
+  // opens of committed manifest files are counted — each one is a parse
+  override def open(f: Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.startsWith("_manifest.v"))
+      FaultFs.manifestOpens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
 }
 
 object FaultFs {
   val ops = new AtomicLong(0L)
   val manifestListings = new AtomicLong(0L)
+  val manifestOpens = new AtomicLong(0L)
   @volatile var budget: Long = Long.MaxValue
   @volatile var trace: Boolean = false
   def arm(b: Long): Unit = { ops.set(0L); budget = b }
@@ -295,5 +303,23 @@ class CrashPointSpec extends AnyFunSuite {
     assert(listings { ManifestVersioned.read(spark, w, "t") } === 1L)
     assert(listings { ManifestVersioned.read(spark, w, "t", Some(1)) } === 0L,
       "a pinned version needs no listing at all")
+  }
+
+  test("history parses each committed manifest once: N versions, " +
+      "N manifest opens") {
+    faultReady
+    val w = "fault:/tmp/graft-crash/history-once"
+    new Path(w).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(w), true)
+    ManifestVersioned.writeFull(spark, w, "h", df(old3), "v")
+    ManifestVersioned.writeDelta(spark, w, "h", df(batch2), "v")
+    ManifestVersioned.writeDelta(spark, w, "h", df(new3), "v")
+    FaultFs.manifestOpens.set(0L)
+    val h = ManifestVersioned.history(spark, w, "h")
+    assert(FaultFs.manifestOpens.get === 3L,
+      "one open per version — every history column derives from one parse")
+    assert(h.select("version", "n_partitions", "n_rows", "part_cols")
+      .as[(Int, Long, Long, String)].collect().toSeq === Seq(
+        (3, 8L, 8L, "v"), (2, 5L, 5L, "v"), (1, 3L, 3L, "v")))
   }
 }
