@@ -2,44 +2,24 @@ package graft.core
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.io.Tables
+import graft.io.ManifestVersioned
 
-/** Pins the KEY-LOCATE INDEX contract of [[Merge.mergePartitionedIndexed]]:
-  *
-  *  1. the touched-partition resolution reads ONLY the `table__keyidx`
-  *     relation — never the data table (the plan-level form of "key
-  *     location is a metadata job at 100 TB");
-  *  2. the indexed path's output and write-amplification are identical to
-  *     [[Merge.mergePartitioned]] (same survivors, untouched partitions'
-  *     files bit-identical);
-  *  3. after every move — in-place update, cross-partition key move,
-  *     tombstone-emptied partition — the index equals the table's
-  *     (key, partition) projection exactly (the invariant that keeps
-  *     future locates correct).
+/** Pins the KEY-LOCATE index a partitioned merge keeps: the per-entry
+  * key ranges in the table's manifest ([[ManifestVersioned.Entry]]
+  * `stats`), which narrow the partitions the merge's key-locate join
+  * scans. After a cross-partition key move both partitions' entries
+  * describe their new content exactly, so a later change to the moved
+  * key locates only its new partition; a no-op change-set leaves every
+  * entry as it was.
   */
 class MergeKeyIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def fileState(wh: String, table: String): Map[String, (Long, Long)] = {
-    val base = new Path(s"$wh/$table")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Map.empty
-    val it = fs.listFiles(base, true)
-    val out = scala.collection.mutable.Map[String, (Long, Long)]()
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(base.toString)
-      if (f.getPath.getName.endsWith(".parquet"))
-        out(rel) = (f.getLen, f.getModificationTime)
-    }
-    out.toMap
-  }
 
   private def seed(wh: String): Unit = {
     val v1 = Seq(
@@ -48,122 +28,68 @@ class MergeKeyIndexSpec extends AnyFunSuite {
       ("C", 5L, 50.0))
       .toDF("region", "id", "amount")
       .select($"id", $"amount", $"region")
-    val base = new Path(s"$wh/sales")
-    base.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(base, true)
-    Tables.writeWarehousePartitioned(v1, wh, "sales", Seq("region"))
-    Merge.buildKeyIndex(spark, wh, "sales", "id", "region")
+    ManifestVersioned.writeFull(spark, wh, "sales", v1, "region")
   }
 
-  private def mergeIndexed(wh: String, change: org.apache.spark.sql.DataFrame) =
-    Merge.mergePartitionedIndexed(spark, wh, "sales", change,
+  private def mergeChange(wh: String, change: DataFrame) =
+    ManifestVersioned.mergeVersioned(spark, wh, "sales", change,
       keyCol = "id", partitionCol = "region",
       order = Seq($"amount".desc_nulls_last),
       isTombstone = $"region" === "DELETED")
 
-  /** index content must equal the table's (key, partition) projection. */
-  private def assertIndexExact(wh: String): Unit = {
-    val table = Tables.readWarehouse(spark, wh, "sales")
-      .select($"id", $"region".cast("string")).as[(Long, String)].collect().toSet
-    val idx = Tables.readWarehouse(spark, wh, Merge.keyIndexName("sales"))
-      .select($"id", $"region".cast("string")).as[(Long, String)].collect().toSet
-    assert(idx === table, "key index drifted from the table's (key, partition) projection")
-  }
+  private def entries(wh: String) =
+    ManifestVersioned.manifestEntries(spark, wh, "sales")
 
-  test("locate plan reads only the index relation, never the table") {
-    val wh = Files.createTempDirectory("graft-mki").toString
-    seed(wh)
-    val change = Seq((3L, 99.0, "B")).toDF("id", "amount", "region")
-    val touched = Merge.touchedPartitionsIndexed(spark, wh, "sales", change,
-      "id", "region", $"region" === "DELETED")
-    val scans = touched.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val fileScans = scans.filter(_.contains(wh))
-    assert(fileScans.nonEmpty, s"expected an index scan, got:\n${scans.mkString("\n")}")
-    // every warehouse scan must be of sales__keyidx; none of the bare table
-    val masked = fileScans.map(_.replace("sales__keyidx", "IDX"))
-    assert(masked.forall(!_.contains("sales")),
-      s"locate plan scans the data table:\n${fileScans.mkString("\n")}")
-    assert(touched.as[String].collect().toSet === Set("B"))
-  }
-
-  test("indexed merge ≡ locate-scan merge; untouched partitions bit-identical") {
-    val whA = Files.createTempDirectory("graft-mki").toString
-    val whB = Files.createTempDirectory("graft-mki").toString
-    seed(whA); seed(whB)
-    val beforeA = fileState(whA, "sales")
-    val change = Seq((3L, 99.0, "B")).toDF("id", "amount", "region")
-
-    val touchedIdx = mergeIndexed(whA, change)
-    val touchedScan = Merge.mergePartitioned(spark, whB, "sales", change,
-      "id", "region", Seq($"amount".desc_nulls_last), $"region" === "DELETED")
-    assert(touchedIdx.toSet === touchedScan.toSet)
-    assert(touchedIdx.toSet === Set("B"))
-
-    def rows(wh: String) = Tables.readWarehouse(spark, wh, "sales")
-      .select($"region", $"id", $"amount").as[(String, Long, Double)].collect().toSet
-    assert(rows(whA) === rows(whB), "indexed path must produce the same table")
-
-    val afterA = fileState(whA, "sales")
-    val untouched = (p: String) => !p.contains("region=B")
-    assert(afterA.filter(t => untouched(t._1)) === beforeA.filter(t => untouched(t._1)),
-      "untouched partitions must keep their exact file set")
-    assertIndexExact(whA)
+  /** The recorded `id` range of a region's entry, as longs. */
+  private def idRange(e: Map[String, ManifestVersioned.Entry],
+      region: String): (Option[Long], Option[Long]) = {
+    val r = e(ManifestVersioned.keyOf(region)).stats("id")
+    (r.lo.map(_.toLong), r.hi.map(_.toLong))
   }
 
   test("cross-partition key move updates both partitions' index entries") {
     val wh = Files.createTempDirectory("graft-mki").toString
     seed(wh)
-    val before = fileState(wh, "sales")
-    val change = Seq((1L, 11.0, "D")).toDF("id", "amount", "region")
-    val touched = mergeIndexed(wh, change)
-    assert(touched.toSet === Set("A", "D"))
-    for (p <- Seq("region=B", "region=C"))
-      assert(fileState(wh, "sales").filter(_._1.contains(p)) ===
-        before.filter(_._1.contains(p)), s"$p must not be rewritten")
-    assertIndexExact(wh)
-    // the index must not keep a stale A-copy of id=1: a follow-up change to
-    // id=1 must locate ONLY region=D
-    val relocate = Merge.touchedPartitionsIndexed(spark, wh, "sales",
-      Seq((1L, 12.0, "D")).toDF("id", "amount", "region"),
-      "id", "region", $"region" === "DELETED")
-    assert(relocate.as[String].collect().toSet === Set("D"))
-  }
+    val e1 = entries(wh)
+    assert(idRange(e1, "A") === (Some(1L), Some(2L)))
 
-  test("tombstone-emptied partition is deleted from table AND index") {
-    val wh = Files.createTempDirectory("graft-mki").toString
-    seed(wh)
-    val change = Seq((5L, Option.empty[Double], "DELETED"))
-      .toDF("id", "amount", "region")
-    val touched = mergeIndexed(wh, change)
-    assert(touched.toSet === Set("C"))
-    assert(!fileState(wh, "sales").keys.exists(_.contains("region=C")))
-    assert(!fileState(wh, Merge.keyIndexName("sales")).keys.exists(_.contains("region=C")),
-      "emptied partition's index directory must be deleted too")
-    assertIndexExact(wh)
+    val (touched, _) =
+      mergeChange(wh, Seq((1L, 11.0, "D")).toDF("id", "amount", "region"))
+    assert(touched.toSet === Set("A", "D"))
+    val e2 = entries(wh)
+    // the source entry no longer covers id=1; the destination's does
+    assert(idRange(e2, "A") === (Some(2L), Some(2L)))
+    assert(idRange(e2, "D") === (Some(1L), Some(1L)))
+    for (p <- Seq("B", "C"))
+      assert(e2(ManifestVersioned.keyOf(p)) === e1(ManifestVersioned.keyOf(p)),
+        s"region=$p's entry must not change")
+
+    // no stale A-copy of id=1 is left to find: a follow-up change to
+    // id=1 must locate ONLY region=D
+    val (relocated, _) =
+      mergeChange(wh, Seq((1L, 12.0, "D")).toDF("id", "amount", "region"))
+    assert(relocated.toSet === Set("D"))
+    assert(entries(wh)(ManifestVersioned.keyOf("A")) ===
+      e2(ManifestVersioned.keyOf("A")))
   }
 
   test("no-op change-set touches neither table nor index") {
     val wh = Files.createTempDirectory("graft-mki").toString
     seed(wh)
-    val beforeT = fileState(wh, "sales")
-    val beforeI = fileState(wh, Merge.keyIndexName("sales"))
+    val before = entries(wh)
+    val rowsBefore = ManifestVersioned.read(spark, wh, "sales")
+      .select($"id", $"amount", $"region").as[(Long, Double, String)]
+      .collect().toSet
+    // tombstone for a key that never existed
     val change = Seq((42L, Option.empty[Double], "DELETED"))
       .toDF("id", "amount", "region")
-    assert(mergeIndexed(wh, change).isEmpty)
-    assert(fileState(wh, "sales") === beforeT)
-    assert(fileState(wh, Merge.keyIndexName("sales")) === beforeI)
-  }
-
-  test("multi-night chain keeps the index exact") {
-    val wh = Files.createTempDirectory("graft-mki").toString
-    seed(wh)
-    mergeIndexed(wh, Seq((3L, 99.0, "B")).toDF("id", "amount", "region"))
-    mergeIndexed(wh, Seq((1L, 11.0, "D")).toDF("id", "amount", "region"))
-    mergeIndexed(wh, Seq((5L, Option.empty[Double], "DELETED"))
-      .toDF("id", "amount", "region"))
-    mergeIndexed(wh, Seq((6L, 60.0, "A")).toDF("id", "amount", "region"))
-    assertIndexExact(wh)
-    val rows = Tables.readWarehouse(spark, wh, "sales")
-      .select($"region", $"id").as[(String, Long)].collect().toSet
-    assert(rows === Set(("A", 2L), ("A", 6L), ("B", 3L), ("B", 4L), ("D", 1L)))
+    val (touched, v) = mergeChange(wh, change)
+    assert(touched.isEmpty)
+    assert(v === 1)
+    assert(ManifestVersioned.listVersions(spark, wh, "sales") === Seq(1))
+    assert(entries(wh) === before, "the manifest's entries must not move")
+    assert(ManifestVersioned.read(spark, wh, "sales")
+      .select($"id", $"amount", $"region").as[(Long, Double, String)]
+      .collect().toSet === rowsBefore)
   }
 }

@@ -3,37 +3,34 @@ package graft.core
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.io.Tables
+import graft.io.ManifestVersioned
 
-/** Pins the WRITE-AMPLIFICATION contract of [[Merge.mergePartitioned]]: a
-  * change-set touching one partition rewrites exactly that partition's
-  * files; untouched partitions' files are byte-for-byte the same file set
-  * (path + length + modification time). Also covers the two hard cases the
-  * flagship q_merge_partitioned oracle can't isolate: a key MOVING between
-  * partitions (both directories rewritten, no stale copy left behind) and
-  * a partition EMPTIED by tombstones (directory deleted — dynamic
-  * overwrite alone cannot express that).
+/** Pins the WRITE-AMPLIFICATION contract of a partitioned merge
+  * ([[ManifestVersioned.mergeVersioned]]) on the two cases a plain
+  * in-place update cannot show: a key MOVING between partitions rewrites
+  * exactly its source and its destination (no stale copy survives in
+  * the source), and a change-set that changes nothing writes nothing.
   */
 class MergePartitionedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** (relative path, length, modtime) for every data file under the table. */
-  private def fileState(wh: String, table: String): Map[String, (Long, Long)] = {
-    val base = new Path(s"$wh/$table")
+  /** (relative path, length, modtime) for every data file of the table. */
+  private def fileState(wh: String): Map[String, (Long, Long)] = {
+    val base = new Path(s"$wh/sales.mv")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Map.empty
     val it = fs.listFiles(base, true)
     val out = scala.collection.mutable.Map[String, (Long, Long)]()
     while (it.hasNext) {
       val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(base.toString)
       if (f.getPath.getName.endsWith(".parquet"))
-        out(rel) = (f.getLen, f.getModificationTime)
+        out(f.getPath.toString.stripPrefix(base.toString)) =
+          (f.getLen, f.getModificationTime)
     }
     out.toMap
   }
@@ -45,113 +42,66 @@ class MergePartitionedSpec extends AnyFunSuite {
       ("C", 5L, 50.0))
       .toDF("region", "id", "amount")
       .select($"id", $"amount", $"region")
-    val base = new Path(s"$wh/sales")
-    base.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(base, true)
-    Tables.writeWarehousePartitioned(v1, wh, "sales", Seq("region"))
+    ManifestVersioned.writeFull(spark, wh, "sales", v1, "region")
   }
 
-  private def mergeChange(wh: String, change: org.apache.spark.sql.DataFrame) =
-    Merge.mergePartitioned(spark, wh, "sales", change,
+  private def mergeChange(wh: String, change: DataFrame) =
+    ManifestVersioned.mergeVersioned(spark, wh, "sales", change,
       keyCol = "id", partitionCol = "region",
       order = Seq($"amount".desc_nulls_last),
       isTombstone = $"region" === "DELETED")
 
-  test("1-partition change-set rewrites exactly 1 partition") {
-    val wh = Files.createTempDirectory("graft-mp").toString
-    seed(wh)
-    val before = fileState(wh, "sales")
-    assert(before.keys.exists(_.contains("region=A")))
-
-    // update id=3 in place (stays in B): only region=B may be rewritten
-    val change = Seq((3L, 99.0, "B")).toDF("id", "amount", "region")
-    val touched = mergeChange(wh, change)
-    assert(touched.toSet === Set("B"))
-
-    val after = fileState(wh, "sales")
-    val untouchedBefore = before.filterNot(_._1.contains("region=B"))
-    val untouchedAfter = after.filterNot(_._1.contains("region=B"))
-    assert(untouchedAfter === untouchedBefore,
-      "files outside region=B must be bit-identical (same path/len/modtime)")
-    assert(before.keys.filter(_.contains("region=B")).toSet !=
-      after.keys.filter(_.contains("region=B")).toSet ||
-      before.filter(_._1.contains("region=B")) != after.filter(_._1.contains("region=B")),
-      "region=B must actually be rewritten")
-
-    val rows = Tables.readWarehouse(spark, wh, "sales")
-      .select($"id", $"amount").as[(Long, Double)].collect().toSet
-    assert(rows === Set((1L, 10.0), (2L, 20.0), (3L, 99.0), (4L, 40.0), (5L, 50.0)))
-  }
+  private def dirOf(m: Map[String, String], region: String) =
+    m(ManifestVersioned.keyOf(region))
 
   test("key moving between partitions rewrites source and destination only") {
     val wh = Files.createTempDirectory("graft-mp").toString
     seed(wh)
-    val before = fileState(wh, "sales")
+    val m1 = ManifestVersioned.manifest(spark, wh, "sales")
+    val before = fileState(wh)
 
     // id=1 moves A -> D (new partition); B and C untouched
-    val change = Seq((1L, 11.0, "D")).toDF("id", "amount", "region")
-    val touched = mergeChange(wh, change)
+    val (touched, v2) =
+      mergeChange(wh, Seq((1L, 11.0, "D")).toDF("id", "amount", "region"))
+    assert(v2 === 2)
     assert(touched.toSet === Set("A", "D"))
 
-    val after = fileState(wh, "sales")
-    for (p <- Seq("region=B", "region=C"))
-      assert(after.filter(_._1.contains(p)) === before.filter(_._1.contains(p)),
-        s"$p must not be rewritten")
-    val rows = Tables.readWarehouse(spark, wh, "sales")
-      .select($"region", $"id", $"amount").as[(String, Long, Double)].collect().toSet
+    val m2 = ManifestVersioned.manifest(spark, wh, "sales")
+    assert(m2.keySet === (m1.keySet + ManifestVersioned.keyOf("D")))
+    assert(dirOf(m2, "A") !== dirOf(m1, "A"), "region=A must be rewritten")
+    for (p <- Seq("B", "C")) {
+      assert(dirOf(m2, p) === dirOf(m1, p), s"region=$p must not be rewritten")
+      val dir = dirOf(m1, p)
+      assert(fileState(wh).filter(_._1.contains(dir)) ===
+        before.filter(_._1.contains(dir)),
+        s"region=$p files must be bit-identical (same path/len/modtime)")
+    }
+    val rows = ManifestVersioned.read(spark, wh, "sales")
+      .select($"region", $"id", $"amount").as[(String, Long, Double)]
+      .collect().toSet
     assert(rows === Set(
       ("A", 2L, 20.0), ("B", 3L, 30.0), ("B", 4L, 40.0),
       ("C", 5L, 50.0), ("D", 1L, 11.0)),
       "the old copy of id=1 must not survive in region=A")
   }
 
-  test("fully-tombstoned partition's directory is deleted") {
-    val wh = Files.createTempDirectory("graft-mp").toString
-    seed(wh)
-    val before = fileState(wh, "sales")
-
-    // tombstone the only row of C: its directory must vanish entirely
-    val change = Seq((5L, Option.empty[Double], "DELETED"))
-      .toDF("id", "amount", "region")
-    val touched = mergeChange(wh, change)
-    assert(touched.toSet === Set("C"))
-
-    val after = fileState(wh, "sales")
-    assert(!after.keys.exists(_.contains("region=C")),
-      "region=C still has files after all its keys were tombstoned")
-    for (p <- Seq("region=A", "region=B"))
-      assert(after.filter(_._1.contains(p)) === before.filter(_._1.contains(p)))
-    val rows = Tables.readWarehouse(spark, wh, "sales")
-      .select($"id").as[Long].collect().toSet
-    assert(rows === Set(1L, 2L, 3L, 4L))
-  }
-
-  test("slice scan is partition-pruned (PartitionFilters on the touched set)") {
-    val wh = Files.createTempDirectory("graft-mp").toString
-    seed(wh)
-    val change = Seq((3L, 99.0, "B")).toDF("id", "amount", "region")
-    val (touched, merged) = Merge.mergePartitionedPlan(spark, wh, "sales",
-      change, "id", "region", Seq($"amount".desc_nulls_last),
-      $"region" === "DELETED")
-    assert(touched.toSet === Set("B"))
-    // the target slice's FileScan must prune on region — the plan-level
-    // form of "untouched partitions are never read"
-    val scans = merged.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val targetScan = scans.find(s => s.contains(wh) && s.contains("amount"))
-    assert(targetScan.exists(s =>
-      s.contains("PartitionFilters") && s.contains("region IN (B)") ||
-        targetScan.exists(_.matches("(?s).*PartitionFilters: \\[[^\\]]*region.*"))),
-      s"expected a partition-pruned scan of the target, got:\n${scans.mkString("\n")}")
-  }
-
   test("no-op change-set touches nothing") {
     val wh = Files.createTempDirectory("graft-mp").toString
     seed(wh)
-    val before = fileState(wh, "sales")
-    // tombstone for a key that never existed
-    val change = Seq((42L, Option.empty[Double], "DELETED"))
-      .toDF("id", "amount", "region")
-    val touched = mergeChange(wh, change)
-    assert(touched.isEmpty)
-    assert(fileState(wh, "sales") === before)
+    val m1 = ManifestVersioned.manifest(spark, wh, "sales")
+    val before = fileState(wh)
+    // an empty change-set, and a tombstone for a key that never existed
+    val noOps = Seq(
+      Seq((1L, 11.0, "A")).toDF("id", "amount", "region").limit(0),
+      Seq((42L, Option.empty[Double], "DELETED"))
+        .toDF("id", "amount", "region"))
+    for (noOp <- noOps) {
+      val (touched, v) = mergeChange(wh, noOp)
+      assert(touched.isEmpty)
+      assert(v === 1, "a no-op merge must commit no version")
+      assert(ManifestVersioned.listVersions(spark, wh, "sales") === Seq(1))
+      assert(ManifestVersioned.manifest(spark, wh, "sales") === m1)
+      assert(fileState(wh) === before)
+    }
   }
 }

@@ -158,39 +158,6 @@ class ManifestVersionedSpec extends AnyFunSuite {
       (5L, "p0", 50L)))
     assert(ManifestVersioned.read(spark, wh, "t", Some(1))
       .select("k").as[Long].collect().toSet === Set(1L, 2L, 3L, 4L, 5L))
-
-    // a key MOVING between partitions (key 2: p1 -> p2) rewrites exactly
-    // its source and its destination; p0 keeps its version-1 files
-    val (moved, v3) = ManifestVersioned.mergeVersioned(spark, wh, "t",
-      Seq((2L, "p2", 21L, 3L, false)).toDF("k", "p", "v", "o", "del"),
-      "k", "p", Seq(col("o").desc), col("del"))
-    assert(v3 === 3)
-    assert(moved.toSet === Set("p1", "p2"))
-    val m3 = ManifestVersioned.manifest(spark, wh, "t", Some(3))
-    assert(m3.keySet === m2.keySet)
-    assert(m3(ManifestVersioned.keyOf("p0")) === m1(ManifestVersioned.keyOf("p0")))
-    for (p <- Seq("p1", "p2"))
-      assert(m3(ManifestVersioned.keyOf(p)) !== m2(ManifestVersioned.keyOf(p)))
-    assert(ManifestVersioned.read(spark, wh, "t")
-      .select("k", "p", "v").as[(Long, String, Long)].collect().sorted.toSeq
-      === Seq((1L, "p1", 10L), (2L, "p2", 21L), (3L, "p2", 99L),
-        (5L, "p0", 50L)),
-      "the old copy of key 2 must not survive in p1")
-
-    // an EMPTY change-set and a NO-OP one (a tombstone for a key the
-    // table never held) touch nothing and commit no version
-    val noOps = Seq(
-      change.limit(0),
-      Seq((42L, null.asInstanceOf[String], 0L, 4L, true))
-        .toDF("k", "p", "v", "o", "del"))
-    for (noOp <- noOps) {
-      val (none, vSame) = ManifestVersioned.mergeVersioned(spark, wh, "t",
-        noOp, "k", "p", Seq(col("o").desc), col("del"))
-      assert(none.isEmpty)
-      assert(vSame === 3)
-      assert(ManifestVersioned.listVersions(spark, wh, "t") === Seq(1, 2, 3))
-      assert(ManifestVersioned.manifest(spark, wh, "t") === m3)
-    }
   }
 
   test("compactPartitions folds file sprawl bit-identically as a new version") {
